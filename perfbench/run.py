@@ -23,7 +23,7 @@ import threading
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 WORKLOADS = ("profile_interactive", "query_sweep")
-SPARK_JARS = os.environ.get("SPARK_JARS", "/opt/spark/jars")
+SPARK_JARS = os.path.join(os.environ.get("SPARK_HOME", "/opt/spark"), "jars")  # as in the engine build
 HEAP = "3g"
 BUILD_TIMEOUT_S = 840
 RUN_TIMEOUT_S = 170
@@ -125,7 +125,7 @@ def main():
     if not os.path.isdir(os.path.join(ROOT, "src", "main", "scala", "graft")):
         fail(f"engine sources not found under {ROOT}/src/main/scala; run from a source checkout")
     if not os.path.isdir(SPARK_JARS):
-        fail(f"Spark jars not found at {SPARK_JARS} (set SPARK_JARS)")
+        fail(f"Spark jars not found at {SPARK_JARS} (set SPARK_HOME)")
     classes = build()
 
     work = os.path.join(HERE, ".work", f"{a.workload}-{os.getpid()}")

@@ -160,7 +160,7 @@ object ProfileGen {
       }
       w.write("</MetricTable>\n<LoadModuleTable>\n")
       for (m <- 0 until nModules)
-        w.write(s"""<LoadModule i="${m + 1}" n="/opt/app/lib/libmod$m.so"/>\n""")
+        w.write(s"""<LoadModule i="${m + 1}" n="/app/lib/libmod$m.so"/>\n""")
       w.write("</LoadModuleTable>\n<FileTable>\n")
       for (f <- 0 until nFiles)
         w.write(s"""<File i="${f + 100}" n="./src/unit${f % 9}/./file$f.F90"/>\n""")
