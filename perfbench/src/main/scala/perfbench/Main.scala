@@ -2,6 +2,8 @@ package perfbench
 
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path, Paths}
+import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark entry point, one workload per process:
@@ -152,9 +154,10 @@ object Main {
         (n, if (n == "process.peak_rss_mb") Stats.peakRssMb() else r.layers.getOrElse(n, 0.0), u) }
       else e2e.map { case (n, v, u, _) => (n, v, u) }
     if (o.trace) metrics.foreach { case (n, v, u) => println(f"layer $n $v%.4f $u") }
-    val body = metrics.map { case (n, v, u) =>
-      s""""$n": {"value": ${Json.num(v)}, "unit": "$u"}""" }.mkString(", ")
-    s"""{"correct": ${failed == 0}, "attempted": $attempted, "failed": $failed, "metrics": {$body}}"""
+    val out = Json.obj().put("correct", failed == 0).put("attempted", attempted).put("failed", failed)
+    val body = out.putObject("metrics")
+    metrics.foreach { case (n, v, u) => body.putObject(n).put("value", Json.finite(v)).put("unit", u) }
+    Json.mapper.writeValueAsString(out)
   }
 }
 
@@ -170,19 +173,18 @@ final case class Ctx(spark: SparkSession, client: Client, tracer: Option[Tracer]
   def setupWallS: Double = (firstTimedNs - entryNs) / 1e9
 }
 
+/** JSON output through Jackson (on Spark's classpath). */
 object Json {
-  def num(v: Double): String =
-    if (v.isNaN || v.isInfinite) "0" else java.math.BigDecimal.valueOf(v).toPlainString
+  val mapper = new ObjectMapper
 
-  def str(s: String): String = "\"" + s.flatMap {
-    case '"' => "\\\""; case '\\' => "\\\\"; case ch if ch < ' ' => f"\\u${ch.toInt}%04x"; case ch => ch.toString
-  } + "\""
+  def obj(): ObjectNode = mapper.createObjectNode()
 
-  def write(p: Path, lines: Iterable[String]): Unit = {
+  /** A measured value as JSON can hold it: a value with no samples (NaN) reads 0. */
+  def finite(v: Double): Double = if (v.isNaN || v.isInfinite) 0.0 else v
+
+  /** Write one JSON object per line. */
+  def writeLines(p: Path, objs: Iterable[ObjectNode]): Unit = {
     Files.createDirectories(p.getParent)
-    Files.write(p, lines.mkString("", "\n", "\n").getBytes(UTF_8))
+    Files.write(p, objs.map(mapper.writeValueAsString).mkString("", "\n", "\n").getBytes(UTF_8))
   }
-
-  def obj(kv: Iterable[(String, String)]): String =
-    kv.map { case (k, v) => s"${str(k)}: $v" }.mkString("{", ", ", "}")
 }

@@ -78,19 +78,21 @@ final case class TraceView(spans: Seq[Span], stats: Map[String, GroupStats], cor
     * time, and its own job group's Spark work with the plan fingerprint.
     */
   def write(p: Path, originNs: Long): Unit = {
-    def rel(ns: Long) = Json.num((ns - originNs) / 1e6)
-    Json.write(p, spans.sortBy(_.id).map { s =>
+    def rel(ns: Long) = (ns - originNs) / 1e6
+    Json.writeLines(p, spans.sortBy(_.id).map { s =>
       val g = stats.getOrElse(s.group, new GroupStats)
-      Json.obj(Seq(
-        "id" -> s.id.toString, "name" -> Json.str(s.name), "layer" -> Json.str(s.layer),
-        "op" -> s.opId.toString, "parent" -> s.parent.toString, "group" -> Json.str(s.group),
-        "start_ms" -> rel(s.startNs), "end_ms" -> rel(s.endNs), "self_ms" -> Json.num(selfMs(s)),
-        "jobs" -> g.jobs.toString, "stages" -> g.stages.toString, "tasks" -> g.tasks.toString,
-        "executor_run_ms" -> g.runMs.toString, "executor_cpu_ms" -> Json.num(g.cpuNs / 1e6),
-        "shuffle_write_bytes" -> g.shuffleWrite.toString, "shuffle_read_bytes" -> g.shuffleRead.toString,
-        "spill_bytes" -> g.spill.toString, "plan_ms" -> Json.num(g.planMs),
-        "rows_examined" -> g.rowsExamined.toString, "rows_out" -> g.rowsOut.toString,
-        "plan_fingerprint" -> Json.obj(g.operators.toSeq.sorted.map { case (k, v) => k -> v.toString })))
+      val o = Json.obj()
+        .put("id", s.id).put("name", s.name).put("layer", s.layer)
+        .put("op", s.opId).put("parent", s.parent).put("group", s.group)
+        .put("start_ms", rel(s.startNs)).put("end_ms", rel(s.endNs)).put("self_ms", selfMs(s))
+        .put("jobs", g.jobs).put("stages", g.stages).put("tasks", g.tasks)
+        .put("executor_run_ms", g.runMs).put("executor_cpu_ms", g.cpuNs / 1e6)
+        .put("shuffle_write_bytes", g.shuffleWrite).put("shuffle_read_bytes", g.shuffleRead)
+        .put("spill_bytes", g.spill).put("plan_ms", Json.finite(g.planMs))
+        .put("rows_examined", g.rowsExamined).put("rows_out", g.rowsOut)
+      val fingerprint = o.putObject("plan_fingerprint")
+      g.operators.toSeq.sorted.foreach { case (k, v) => fingerprint.put(k, v) }
+      o
     })
   }
 }

@@ -7,11 +7,12 @@ import scala.util.Random
 import Main.Result
 
 /** The workloads. Each run: set-up, repeated three times (the median is `setup_s`),
-  * an untimed warm-up, then timed passes of the workload's fixed script for at least
-  * `--seconds`; one pass takes most of a run's time budget, so a run usually measures
-  * one. A traced run traces the same passes, then measures the tracing overhead in an
-  * interleaved untraced/traced A/B of a smaller unit of work, then probes single
-  * layers; the per-layer metrics come from the spans and probes.
+  * an untimed warm-up, then timed passes of the workload's fixed script: whole passes
+  * until `--seconds` elapsed, at least one. A pass takes 8-35 s on a 4-core machine,
+  * so with `--seconds 1` every run measures exactly one. A traced run traces the same
+  * passes, then measures the tracing overhead in an interleaved untraced/traced A/B of
+  * a smaller unit of work, then probes single layers; the per-layer metrics come from
+  * the spans and probes.
   */
 object Workloads {
   val SetupReps = 3
@@ -67,14 +68,19 @@ object Workloads {
     val dir = o.work.resolve("interactive")
     var pair = Seq.empty[ProfileInput]
     var study = Seq.empty[ProfileInput]
+    var pfs = Seq.empty[(graft.hpct.ProfileFrame, ProfileGen.Expected)]
+    // set-up: generate the inputs and run the paper script on them, untimed; the first
+    // repetition also pays the session's one-time JIT and code generation
     val setups = (1 to SetupReps).map(_ => secs {
       pair = Profiles.fixturePair(dir, o.seed)
       study = Profiles.study(dir.resolve("study"), o.seed, StudyFiles, StudyRows)
+      pfs = Profiles.paperScript(c, pair)
     }._2)
     val studyRows = study.map(_.expected.rows.toLong).sum
-    // warm-up: the paper script pays the session's one-time JIT and code generation,
-    // most of the cold-start cost of a pass
-    Profiles.paperScript(c, pair)
+    // warm-up of the rest of a pass, with session-call arguments no timed pass draws
+    Profiles.loadMany(c, study)
+    Profiles.scan(c, study)
+    Profiles.sessionCalls(c, pfs, new Random(-(o.seed * 7919L) - 1))
     val mark0 = ctx.tracer.map(_.mark).getOrElse(0L)
     val passes = window(ctx) { i =>
       val from = c.calls.length
@@ -127,8 +133,8 @@ object Workloads {
     if (o.writeExpected) Expected.write(o.expected, digests.toMap)
     val layers = ctx.tracer.fold(Map.empty[String, Double]) { tracer =>
       val mark1 = tracer.mark
-      val hierarchy = names.filter(Sweep.familyOf(_) == "hierarchy")
-      val ab = overhead(ctx, tracer)(hierarchy.foreach(Sweep.runQuery(c, dir, _, expected)))
+      val firstOfEach = Sweep.Families.flatMap(f => names.find(Sweep.familyOf(_) == f))
+      val ab = overhead(ctx, tracer)(firstOfEach.foreach(Sweep.runQuery(c, dir, _, expected)))
       val kernels = Sweep.kernelNsPerRow(ctx.spark, dir, 5).map { case (k, v) => s"functions.$k.ns_per_row" -> v }
       val stages = prewarms.flatMap(_._1.toSeq).groupBy(_._1).map { case (st, vs) =>
         s"prewarm.${st}_s" -> Stats.median(vs.map(_._2)) }
@@ -153,19 +159,18 @@ object Workloads {
 
 /** The committed per-query digests of the sweep. */
 object Expected {
-  private val mapper = new com.fasterxml.jackson.databind.ObjectMapper
-
   def read(p: Path): Map[String, Sweep.Digest] = {
-    val root = mapper.readTree(p.toFile).get("queries")
+    val root = Json.mapper.readTree(p.toFile).get("queries")
     root.fieldNames().asScala.map { q =>
       q -> Sweep.Digest(root.get(q).get("rows").asLong, root.get(q).get("hash").asLong)
     }.toMap
   }
 
   def write(p: Path, digests: Map[String, Sweep.Digest]): Unit = {
-    val rows = digests.toSeq.sortBy(_._1).map { case (q, d) =>
-      s"""    ${Json.str(q)}: {"rows": ${d.rows}, "hash": ${d.hash}}""" }
-    Json.write(p, Seq("{", """  "note": "row count and content hash of each query on the committed tables",""",
-      """  "queries": {""", rows.mkString(",\n"), "  }", "}"))
+    val root = Json.obj().put("note", "row count and content hash of each query on the committed tables")
+    val queries = root.putObject("queries")
+    digests.toSeq.sortBy(_._1).foreach { case (q, d) => queries.putObject(q).put("rows", d.rows).put("hash", d.hash) }
+    Files.createDirectories(p.getParent)
+    Json.mapper.writerWithDefaultPrettyPrinter().writeValue(p.toFile, root)
   }
 }
