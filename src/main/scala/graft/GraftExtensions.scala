@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 
-import graft.functions.{BigramStats, BoundedCollectMin, CountWordsIn, MinHash8, NormalizeText, RollingFp, ShingleHashes, SimHash128, SimHash64, TokenCounts, TokenHash16, VecDot}
+import graft.functions.{BigramStats, BoundedCollectMin, CountWordsIn, IntersectCount, MinHash8, NormalizeText, RollingFp, ShingleHashes, SimHash128, SimHash64, TokenCounts, TokenHash16, VecDot}
 
 /** Cluster-wide registration of graft's native SQL functions via
   * `spark.sql.extensions=graft.GraftExtensions` — the standard way to ship custom
@@ -102,5 +102,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       // the literal-parsing rules (incl. the out-of-Int-range rejection)
       // live in ONE builder shared with BoundedCollectMin.register
       BoundedCollectMin.build(_)))
+    ext.injectFunction((FunctionIdentifier("intersect_count"), IntersectCount.info, IntersectCount.build(_)))
   }
 }

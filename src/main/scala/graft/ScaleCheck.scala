@@ -521,21 +521,22 @@ object ScaleCheck {
       val media = spark.read.parquet(path)
       val metrics = new graft.StageMetrics
       spark.sparkContext.addSparkListener(metrics)
-      def snap(): (Long, Long) = { graft.StageMetrics.drain(spark); metrics.snapshot }
-      def rep(): (Double, Long, Long) = {
-        val (sp0, sh0) = snap()
-        val (_, sec) = timed(graft.multimodal.Multimodal.decode(media)
-          .write.format("noop").mode("overwrite").save())
-        val (sp1, sh1) = snap()
-        (sec, (sp1 - sp0) >> 20, (sh1 - sh0) >> 20)
-      }
-      val (r1, sp1, sh1) = rep()
-      val (r2, sp2, sh2) = rep()
-      println(f"""SCALECHECK {"step":"m02probe","rows":$n,"image_pct":$pctImg,""" +
-        f""""synth_sec":$synthSec%.1f,"rep1_sec":$r1%.1f,"rep2_sec":$r2%.1f,""" +
-        f""""rep1_spill_mb":$sp1,"rep1_shuffle_mb":$sh1,""" +
-        f""""rep2_spill_mb":$sp2,"rep2_shuffle_mb":$sh2}""")
-      spark.sparkContext.removeSparkListener(metrics)
+      try {
+        def snap(): (Long, Long) = { graft.StageMetrics.drain(spark); metrics.snapshot }
+        def rep(): (Double, Long, Long) = {
+          val (sp0, sh0) = snap()
+          val (_, sec) = timed(graft.multimodal.Multimodal.decode(media)
+            .write.format("noop").mode("overwrite").save())
+          val (sp1, sh1) = snap()
+          (sec, (sp1 - sp0) >> 20, (sh1 - sh0) >> 20)
+        }
+        val (r1, sp1, sh1) = rep()
+        val (r2, sp2, sh2) = rep()
+        println(f"""SCALECHECK {"step":"m02probe","rows":$n,"image_pct":$pctImg,""" +
+          f""""synth_sec":$synthSec%.1f,"rep1_sec":$r1%.1f,"rep2_sec":$r2%.1f,""" +
+          f""""rep1_spill_mb":$sp1,"rep1_shuffle_mb":$sh1,""" +
+          f""""rep2_spill_mb":$sp2,"rep2_shuffle_mb":$sh2}""")
+      } finally spark.sparkContext.removeSparkListener(metrics)
     }
 
     if (stepOn("ivf"))

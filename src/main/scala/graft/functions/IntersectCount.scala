@@ -102,7 +102,10 @@ case class IntersectCount(left: Expression, right: Expression)
       s"intersect_count expects (array<bigint>, array<bigint>) with " +
         s"non-null elements (the ShingleHashes contract; note duplicate " +
         s"probe-side elements each count), got " +
-        s"(${left.dataType.sql}, ${right.dataType.sql})")
+        s"(${left.dataType.sql}, ${right.dataType.sql}). Fix: drop the null " +
+        s"elements with array_compact(...), or, when the source elements are " +
+        s"not nullable, cast to array<bigint> with containsNull = false " +
+        s"(col.cast(ArrayType(LongType, containsNull = false)))")
   override def dataType: DataType = LongType
   override def prettyName: String = "intersect_count"
 
@@ -119,18 +122,27 @@ case class IntersectCount(left: Expression, right: Expression)
 }
 
 object IntersectCount {
+  /** The function's registry entry, shared by [[register]] and
+    * GraftExtensions.injectFunction.
+    */
+  val info: ExpressionInfo =
+    new ExpressionInfo(classOf[IntersectCount].getName, null, "intersect_count",
+      "_FUNC_(a, b) - distinct-intersection cardinality of two " +
+        "array<bigint> columns with non-null elements. Contract: elements " +
+        "within each array are DISTINCT (ShingleHashes output); duplicate " +
+        "probe-side elements each count, diverging from " +
+        "size(array_intersect(a, b)).", "")
+
+  /** The one function-registry builder, shared by [[register]] and
+    * GraftExtensions.injectFunction.
+    */
+  def build(args: Seq[Expression]): IntersectCount = {
+    require(args.length == 2, "intersect_count takes two arguments")
+    IntersectCount(args.head, args(1))
+  }
+
   /** Idempotently register `intersect_count(a, b)`. */
   def register(spark: SparkSession): Unit =
     spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("intersect_count"),
-      new ExpressionInfo(classOf[IntersectCount].getName, null, "intersect_count",
-        "_FUNC_(a, b) - distinct-intersection cardinality of two " +
-          "array<bigint> columns with non-null elements. Contract: elements " +
-          "within each array are DISTINCT (ShingleHashes output); duplicate " +
-          "probe-side elements each count, diverging from " +
-          "size(array_intersect(a, b)).", ""),
-      (args: Seq[Expression]) => {
-        require(args.length == 2, "intersect_count takes two arguments")
-        IntersectCount(args.head, args(1))
-      })
+      FunctionIdentifier("intersect_count"), info, build(_))
 }

@@ -89,111 +89,58 @@ object Ops {
     * one until there are no children or the child's value drops below `threshold`
     * (that child is excluded). Returns the rows whose callpath is on the hot path.
     *
-    * All starts route through [[hotPathOneShot]] — one declarative plan instead of
-    * one argmax job per depth (the per-job overhead dominated the fixture-scale
-    * workload at ~25 tiny jobs per call, the only >2× like-for-like gap vs the
-    * reference). The two formulations are proven equal on both fixtures at two
-    * thresholds, root and prefix starts, by ParitySpec; [[hotPathIterative]] stays
-    * as the reference-shaped equivalence baseline.
+    * One declarative plan, zero driver-side iteration, so it scales to any
+    * depth/width on a cluster (a per-depth argmax loop pays one job per level,
+    * and at fixture scale that per-job overhead dominated the workload).
+    *
+    * A node is on the greedy hot path iff it is the start, or EVERY prefix of its
+    * callpath (itself included) strictly longer than the starting callpath is (a)
+    * the rank-1 child of its sibling group (max value, min id on ties — pandas
+    * idxmax order) and (b) at or above the threshold. That is exactly the set the
+    * greedy descent visits, minus the below-threshold final child it rejects.
+    * Three keyed stages: a per-sibling-group rank window, a prefix explode
+    * (O(depth) per node), and a count-matches aggregation — no collect, no loop.
+    *
+    * A non-empty `callpath` restricts the frame to the subtree rooted there;
+    * sibling groups inside the subtree are complete, so the rank window is
+    * unchanged. The start node is alone in its group there, so it ranks first and
+    * is on the path unconditionally, mirroring the greedy seed. NaN values descend
+    * (Spark orders NaN above every double — same outcome as the reference's
+    * `NaN < threshold == false`); null values stop.
     */
   def hotPath(pf: ProfileFrame, callpath: Seq[Long] = Nil, threshold: Double = 0.05,
-      baseColumn: Option[String] = None): ProfileFrame =
-    hotPathOneShot(pf, threshold, baseColumn, callpath)
-
-  /** The driver-loop hot path: one tiny argmax job per depth (bounded by tree depth
-    * <= 25 in the fixtures); each job is a filter + top-1 sort over a cached
-    * 2-column frame. Kept as the reference-shaped formulation (it also supports a
-    * non-root starting callpath) and as the equivalence baseline for
-    * [[hotPathOneShot]] in ParitySpec.
-    */
-  def hotPathIterative(pf: ProfileFrame, callpath: Seq[Long] = Nil, threshold: Double = 0.05,
       baseColumn: Option[String] = None): ProfileFrame = {
     val base = baseColumn.getOrElse(pf.meta.hotPathColumn)
     require(pf.df.columns.contains(base), s"missing hot-path column $base")
-    val simple = pf.df.select(col(base).as("__v"), col("callpath"), col("id")).cache()
-    try {
-      var current = callpath
-      val hot = Seq.newBuilder[Seq[Long]]
-      var continue = true
-      while (continue) {
-        hot += current
-        val children = simple
-          .filter(size(col("callpath")) === current.length + 1 &&
-            (if (current.isEmpty) lit(true)
-             else slice(col("callpath"), 1, current.length) === lit(current.toArray)))
-          // pandas idxmax takes the first max in row (= id) order — same tie-break
-          .orderBy(desc("__v"), asc("id"))
-          .limit(1).select("callpath", "__v").collect()
-        if (children.isEmpty) continue = false
-        else {
-          val row = children.head
-          current = row.getSeq[Long](0)
-          if (row.isNullAt(1) || row.getDouble(1) < threshold) continue = false
-          // (also mirrors pandas: NaN < threshold is false => NaN child is descended)
-        }
-      }
-      val hotSet = hot.result()
-      val cond = hotSet.map(p =>
-        (col("callpath") === lit(p.toArray)).asInstanceOf[Column]).reduce(_ || _)
-      pf.copy(df = pf.df.filter(cond))
-    } finally simple.unpersist()
-  }
-
-  /** One-shot hot path: the fully declarative formulation of [[hotPath]] — zero
-    * driver-side iteration, so it scales to any depth/width on a cluster.
-    *
-    * A node is on the greedy hot path iff EVERY prefix of its callpath (itself
-    * included) strictly longer than the starting callpath is (a) the rank-1 child of
-    * its sibling group (max value, min id on ties — pandas idxmax order) and (b) at
-    * or above the threshold. That is exactly the set the greedy descent visits,
-    * minus the below-threshold final child it rejects. Three keyed stages: a
-    * per-parent rank window, a prefix explode (O(depth) per node), and a
-    * count-matches aggregation — no collect, no loop.
-    *
-    * A non-empty `start` restricts the frame to the subtree rooted at that callpath
-    * (the node itself is on the path unconditionally, mirroring the greedy seed);
-    * sibling groups inside the subtree are complete, so the rank window is
-    * unchanged. NaN values descend (Spark orders NaN above every double — same
-    * outcome as the loop's `NaN < threshold == false`); null values stop.
-    */
-  def hotPathOneShot(pf: ProfileFrame, threshold: Double = 0.05,
-      baseColumn: Option[String] = None, start: Seq[Long] = Nil): ProfileFrame = {
-    val base = baseColumn.getOrElse(pf.meta.hotPathColumn)
-    require(pf.df.columns.contains(base), s"missing hot-path column $base")
-    val d0 = start.length
+    val d0 = callpath.length
     val sub =
-      if (start.isEmpty) pf.df
+      if (callpath.isEmpty) pf.df
       else pf.df.filter(size(col("callpath")) >= d0 &&
-        slice(col("callpath"), 1, d0) === lit(start.toArray))
+        slice(col("callpath"), 1, d0) === lit(callpath.toArray))
+    val depth = size(col("callpath"))
+    // siblings share depth and parent callpath; the depth keeps the root (whose
+    // clamped parent slice is also empty) out of the depth-1 group. greatest(..., 0):
+    // a -1 length would abort the whole plan
     val winners = sub
-      .filter(size(col("callpath")) > d0)
-      // greatest(..., 0): the size>0 filter already excludes the root at runtime,
-      // but on literal/in-memory sources constant folding evaluates the slice
-      // BEFORE the filter and a -1 length aborts the whole plan
-      .withColumn("__parent",
-        slice(col("callpath"), lit(1), greatest(size(col("callpath")) - 1, lit(0))))
       .withColumn("__rk", row_number().over(
-        Window.partitionBy("__parent").orderBy(desc(s"`$base`"), asc("id"))))
-      .filter(col("__rk") === 1 && col(s"`$base`") >= threshold)
+        Window.partitionBy(depth, slice(col("callpath"), lit(1), greatest(depth - 1, lit(0))))
+          .orderBy(desc(s"`$base`"), asc("id"))))
+      .filter(col("__rk") === 1 && (depth === d0 || col(s"`$base`") >= threshold))
       .select(col("callpath").as("__winner"))
+    // the prefixes below the start; the start node's one prefix is its own callpath,
+    // so a frame without the start row (e.g. the root filtered away) still descends
     val prefixes = sub
       .select(col("id").as("__nid"), col("callpath"))
-      .withColumn("__k",
-        explode(when(size(col("callpath")) > d0,
-          sequence(lit(d0 + 1), size(col("callpath"))))
-          .otherwise(array().cast("array<int>"))))
-      .select(col("__nid"), (size(col("callpath")) - d0).as("__depth"),
+      .withColumn("__k", explode(sequence(least(lit(d0 + 1), depth), depth)))
+      .select(col("__nid"), greatest(depth - d0, lit(1)).as("__n"),
         slice(col("callpath"), lit(1), col("__k")).as("__winner"))
     val hotIds = prefixes
       .join(winners, "__winner")
-      .groupBy("__nid", "__depth")
+      .groupBy("__nid", "__n")
       .agg(count(lit(1)).as("__hits"))
-      .filter(col("__hits") === col("__depth"))
+      .filter(col("__hits") === col("__n"))
       .select(col("__nid"))
-    // the start node (zero prefixes beyond d0) is always on the path — the greedy
-    // descent seeds there; for a root start that is the empty-callpath root row
-    pf.copy(df = sub.join(hotIds, sub("id") === hotIds("__nid"), "left_semi")
-      .unionByName(sub.filter(size(col("callpath")) === d0)))
+    pf.copy(df = sub.join(hotIds, sub("id") === hotIds("__nid"), "left_semi"))
   }
 
   /** Flame-graph geometry (reference HD.py:430-540, minus matplotlib): one row per
@@ -201,18 +148,8 @@ object Ops {
     * normalized to 2π; each deeper layer is sibling-normalized within its parent and
     * offset by the within-parent cumulative sum plus the parent's offset.
     *
-    * Delegates to [[flameGeometryOneShot]] — ONE declarative plan, no per-layer
-    * driver jobs; the layer-join formulation is kept as
-    * [[flameGeometryIterative]] (the reference-shaped equivalence baseline,
-    * proven equal on both fixtures by ParitySpec).
-    */
-  def flameGeometry(pf: ProfileFrame, prefix: Seq[Long] = Nil, column: Option[String] = None,
-      minDepth: Option[Int] = None, maxDepth: Option[Int] = None): DataFrame =
-    flameGeometryOneShot(pf, prefix, column, minDepth, maxDepth)
-
-  /** One-shot flame geometry: the fully declarative formulation — zero driver-side
-    * iteration (the loop version runs one windowed job per tree level, ~25
-    * localCheckpoint'ed jobs on the fixtures, and its per-job overhead dominates).
+    * One declarative plan, zero driver-side iteration (a per-layer loop runs one
+    * windowed job per tree level, and its per-job overhead dominates).
     *
     * Derivation: let r(p) = v(p) / Σ_{siblings of p} v be a node's share of its
     * normalization group (the FULL first layer for depth `lo`, its parent's
@@ -221,14 +158,13 @@ object Ops {
     * x0 = parentX0 + b·parentWidth gives, for a node n at depth d:
     *   width(n) = 2π · Π_{k=lo..d} r(prefix_k(n))
     *   x0(n)    = 2π · Σ_{k=lo..d} b(prefix_k(n)) · Π_{j=lo..k-1} r(prefix_j(n))
-    * Three keyed stages, mirroring [[hotPathOneShot]]'s playbook: a per-group
+    * Three keyed stages, mirroring [[hotPath]]'s playbook: a per-group
     * window computing (r, b) once per NODE, a prefix explode (O(depth) rows per
     * node), and one ordered `aggregate` per node folding its ancestor chain —
     * no collect, no loop, no per-layer jobs; scales to any depth/width.
     */
-  def flameGeometryOneShot(pf: ProfileFrame, prefix: Seq[Long] = Nil,
-      column: Option[String] = None, minDepth: Option[Int] = None,
-      maxDepth: Option[Int] = None): DataFrame = {
+  def flameGeometry(pf: ProfileFrame, prefix: Seq[Long] = Nil, column: Option[String] = None,
+      minDepth: Option[Int] = None, maxDepth: Option[Int] = None): DataFrame = {
     val colName = column.getOrElse(pf.meta.percentageColumn + " ratio of parent")
     val lo = minDepth.getOrElse(prefix.length + 1)
     require(lo > prefix.length, s"minDepth $lo must exceed prefix length ${prefix.length}")
@@ -270,74 +206,6 @@ object Ops {
       (col("__a.p") * twoPi).as("width"),
       col("procedure"),
       (col("__a.p") * twoPi >= lit(math.Pi) / (col("__d") - lo + 32)).as("labeled"))
-  }
-
-  /** The layer-join flame geometry: a driver loop over depth layers (bounded by
-    * tree depth); each layer is one windowed plan plus a join against the previous
-    * layer's geometry. Kept as the reference-shaped equivalence baseline for
-    * [[flameGeometryOneShot]] in ParitySpec.
-    */
-  def flameGeometryIterative(pf: ProfileFrame, prefix: Seq[Long] = Nil, column: Option[String] = None,
-      minDepth: Option[Int] = None, maxDepth: Option[Int] = None): DataFrame = {
-    val colName = column.getOrElse(pf.meta.percentageColumn + " ratio of parent")
-    val lo = minDepth.getOrElse(prefix.length + 1)
-    require(lo > prefix.length, s"minDepth $lo must exceed prefix length ${prefix.length}")
-    val twoPi = 2.0 * math.Pi
-    val base = atPaths(pf, prefix = prefix).df
-      .select(col("id"), col("callpath"), col(colName).as("__v"), col("procedure"))
-      .cache()
-    // ONE bounded action up front (the max tree depth, <= 25 in the fixtures) instead
-    // of a per-layer isEmpty job; the loop then only BUILDS plans. Callpath prefix
-    // closure guarantees no empty layer below the max depth.
-    val maxRow = base.agg(max(size(col("callpath")))).head()
-    if (maxRow.isNullAt(0)) { base.unpersist(); return pf.df.sparkSession.emptyDataFrame }
-    val hi = math.min(maxRow.getInt(0), maxDepth.getOrElse(Int.MaxValue))
-    var depth = lo
-    var prev: DataFrame = null // (pid, pw, po)
-    var out: DataFrame = null
-    try while (depth <= hi) {
-      val layerBase = base.filter(size(col("callpath")) === depth)
-      val layer =
-        if (prev == null) {
-          // depth-lo siblings form ONE normalization group by construction (the full
-          // circle), so the single-partition window is the semantics, not a bottleneck
-          // — its input is one tree level, not the dataset. The key is id*0, not a
-          // literal: EliminateWindowPartitions folds literals away and the resulting
-          // unpartitioned WindowExec WARN would drown real regressions in the logs.
-          val w = Window.partitionBy(col("id") * 0)
-          layerBase.select(col("id"), col("procedure"),
-            (col("__v") / sum("__v").over(w) * twoPi).as("width"),
-            (coalesce(sum("__v").over(w.orderBy("id")
-              .rowsBetween(Window.unboundedPreceding, -1)), lit(0.0))
-              / sum("__v").over(w) * twoPi).as("x0"))
-        } else {
-          val byParent = Window.partitionBy("__parent")
-          layerBase
-            .withColumn("__parent", element_at(col("callpath"), -2))
-            .join(prev, col("__parent") === col("pid"))
-            .select(col("id"), col("procedure"),
-              (col("__v") / sum("__v").over(byParent) * col("pw")).as("width"),
-              (col("po") + coalesce(sum("__v").over(byParent.orderBy("id")
-                .rowsBetween(Window.unboundedPreceding, -1)), lit(0.0))
-                / sum("__v").over(byParent) * col("pw")).as("x0"))
-        }
-      // each layer is locally checkpointed: it feeds both the result union and the
-      // next layer's parent join, and the checkpoint TRUNCATES the logical plan, so
-      // layer d's plan doesn't nest layers lo..d-1 (a lazy 25-deep nested plan makes
-      // the optimizer itself the bottleneck — observed >> 10 min on the fixtures).
-      // One shallow job per layer, bounded by tree depth; on a real cluster swap for
-      // reliable checkpoint() if executor loss matters mid-computation.
-      val geo = layer.select(col("id"), lit(depth).as("depth"), col("x0"), col("width"),
-        col("procedure"),
-        (col("width") >= lit(math.Pi / (depth - lo + 32))).as("labeled"))
-        .localCheckpoint()
-      out = if (out == null) geo else out.unionByName(geo)
-      prev = geo.select(col("id").as("pid"), col("width").as("pw"), col("x0").as("po"))
-      depth += 1
-    // every layer is localCheckpoint'ed (materialized), so the cached base is safe
-    // to drop here — without this the cache leaked once per call (round-3 ADVICE)
-    } finally base.unpersist()
-    if (out == null) pf.df.sparkSession.emptyDataFrame else out
   }
 
   /** Multi-profile merge (SURVEY B17): metric columns differ per file, so align by

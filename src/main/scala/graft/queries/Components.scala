@@ -25,8 +25,8 @@ import org.apache.spark.sql.functions._
   * near-dup clusters are shallow in practice, but a 100 TB corpus can chain, and
   * log-rounds is what makes the driver loop safe there). Each round
   * localCheckpoints a frame of one row per node-in-any-pair — orders of magnitude
-  * smaller than the corpus; the loop is driver-BOUNDED (like hotPathIterative's
-  * depth loop), not driver-SIZED: no per-row data ever reaches the driver except
+  * smaller than the corpus; the loop is driver-BOUNDED (by the round count), not
+  * driver-SIZED: no per-row data ever reaches the driver except
   * the one `changed` count per round.
   */
 object Components {

@@ -1,31 +1,41 @@
 package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+
+import graft.hpct.{Model, Ops, ProfileFrame, ProfileLoad, ProfileMeta}
 
 /** Tree-as-table queries over a synthetic hierarchy derived from the star schema
   * (region -> nation -> customer), mirroring the reference's decisive modeling choice:
-  * the tree is one row per node with a materialized `path` array (reference
-  * hpctoolkit_dataframe.py:283 `callpath`), so every tree operation is a relational
-  * operation on arrays. These are the oracle-checkable analogs of SURVEY §2.A
-  * A8 (ratio-of-total), A9 (ratio-of-parent), A11 (`at_paths`), A12 (`at_depths`),
-  * A14 (`hot_path`), A15 (flame geometry) and §2.B B14 (path self-join).
+  * the tree is one row per node with a materialized `callpath` array (reference
+  * hpctoolkit_dataframe.py:283), so every tree operation is a relational operation
+  * on arrays. The tree is a [[ProfileFrame]], and every query runs the library
+  * operator users call — [[ProfileLoad.addRatioColumns]] (the ratio columns every
+  * profile load adds), [[Ops.atPaths]], [[Ops.atDepths]], [[Ops.hotPath]] and
+  * [[Ops.flameGeometry]] — followed by the query's own projection and order. These
+  * are the oracle-checkable analogs of SURVEY §2.A A8 (ratio-of-total), A9
+  * (ratio-of-parent), A11 (`at_paths`), A12 (`at_depths`), A14 (`hot_path`), A15
+  * (flame geometry) and §2.B B14 (parent lookup).
   *
   * Node ids are offset per level so they're globally unique:
   * region = r_regionkey + 10, nation = n_nationkey + 100, customer = c_custkey + 1000.
   * Node value = c_acctbal rolled up (rounded to 2 dp at each level so Spark's and
-  * DuckDB's summation orders can't produce different bits).
+  * DuckDB's summation orders can't produce different bits). The root row (id
+  * [[Model.RootId]], empty callpath) carries the rounded sum of the region values,
+  * the grand total the oracles divide by; queries whose oracle has no root drop it.
   */
 object Hierarchy {
   import Tables._
 
   type Q = (SparkSession, String) => DataFrame
 
-  /** Per-(session, dir) cache of the nodes frame: seven hierarchy queries share it,
-    * so one build + one in-memory copy instead of seven customer⋈nation rebuilds
-    * (the dominant cost of a bench run; the frame is ~#customers rows, far under
-    * executor memory at any tested SF).
+  /** Per-(session, dir) cache of the tree as a profile load leaves it: the nodes
+    * frame plus the ratio columns every load adds
+    * ([[ProfileLoad.addRatioColumns]] on `value`: `value ratio of parent`, `value
+    * ratio of total`). Seven hierarchy queries share it, so one build + one
+    * in-memory copy instead of seven customer⋈nation rebuilds (the dominant cost
+    * of a bench run; the frame is ~#customers rows, far under executor memory at
+    * any tested SF).
     *
     * Staleness contract: entries key on (session, dir) and are never invalidated —
     * correct for the bench/verify harness (immutable input parquet, short-lived
@@ -36,7 +46,7 @@ object Hierarchy {
     scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
 
   def nodesCached(s: SparkSession, d: String): DataFrame =
-    nodesCache.getOrElseUpdate((s, d), nodes(s, d).cache())
+    nodesCache.getOrElseUpdate((s, d), ProfileLoad.addRatioColumns(nodes(s, d), "value").cache())
 
   /** Materialize the shared cache up front (bench warmup) so per-query timings
     * attribute to plans, not to whichever query touches the cache first.
@@ -54,9 +64,10 @@ object Hierarchy {
     nodesCache.clear()
   }
 
-  /** The (id, path, value) nodes DataFrame. Built from two shuffled aggregations over
-    * customer⋈nation (nation broadcast); at 100 TB the leaf level partitions by id and
-    * the rollups are standard partial-agg shuffles.
+  /** The (id, callpath, value, procedure) nodes DataFrame. Built from two shuffled
+    * aggregations over customer⋈nation (nation broadcast); at 100 TB the leaf level
+    * partitions by id and the rollups are standard partial-agg shuffles. `procedure`
+    * is null: the profile operators carry it, and the tree has no code locations.
     */
   def nodes(s: SparkSession, d: String): DataFrame = {
     val cn = customer(s, d)
@@ -68,18 +79,31 @@ object Hierarchy {
         (col("n_regionkey") + 10).cast("long").as("rk"))
     val reg = cn.groupBy("rk")
       .agg(round(sum("ab"), 2).as("value"))
-      .select(col("rk").as("id"), array(col("rk")).as("path"), col("value"))
+      .select(col("rk").as("id"), array(col("rk")).as("callpath"), col("value"))
+    val root = reg.agg(round(sum("value"), 2).as("value"))
+      .select(lit(Model.RootId).as("id"), typedLit(Seq.empty[Long]).as("callpath"), col("value"))
     val nat = cn.groupBy("rk", "nk")
       .agg(round(sum("ab"), 2).as("value"))
-      .select(col("nk").as("id"), array(col("rk"), col("nk")).as("path"), col("value"))
+      .select(col("nk").as("id"), array(col("rk"), col("nk")).as("callpath"), col("value"))
     val cust = cn.select(
       (col("ck") + 1000).as("id"),
-      array(col("rk"), col("nk"), col("ck") + 1000).as("path"),
+      array(col("rk"), col("nk"), col("ck") + 1000).as("callpath"),
       col("ab").as("value"))
-    reg.unionByName(nat).unionByName(cust)
+    root.unionByName(reg).unionByName(nat).unionByName(cust)
+      .withColumn("procedure", lit(null).cast("string"))
   }
 
-  /** Shared DuckDB CTE defining the identical nodes relation. */
+  /** The tree's sidecar metadata: `value` is both the percentage base and the
+    * hot-path ranking column.
+    */
+  private val TreeMeta = ProfileMeta("hierarchy", Seq(0 -> "value"), Map.empty,
+    Map.empty, Map.empty, Map.empty,
+    percentageColumn = "value", hotPathColumn = "value", compactColumns = Seq("value", "procedure"))
+
+  private def tree(s: SparkSession, d: String): ProfileFrame =
+    ProfileFrame(nodesCached(s, d), TreeMeta) // shared cache — never unpersisted here
+
+  /** Shared DuckDB CTE defining the same nodes relation, without the root row. */
   private val NodesCte: String =
     """WITH cn AS (
       |  SELECT CAST(c_custkey AS BIGINT) AS ck, c_acctbal AS ab,
@@ -94,143 +118,67 @@ object Hierarchy {
       |  SELECT ck + 1000, [rk, nk, ck + 1000], ab FROM cn
       |)""".stripMargin.replace("\n", " ")
 
-  private def pathStr: Column = concat_ws(",", col("path"))
+  private def pathStr: Column = concat_ws(",", col("callpath"))
+  private def depth: Column = size(col("callpath")).cast("long")
+  private def notRoot: Column = col("id") =!= Model.RootId
+  // `+ 0` normalizes IEEE -0.0 to 0.0 (a negative acctbal rounding to zero hashes
+  // as "-0" in one engine and "0" in the other otherwise)
+  private def ratio(c: String): Column = round(col(c), 6) + lit(0.0)
 
   val queries: Map[String, Q] = Map(
-    // B14: parent/child self-join on path prefix (reference parent lookup HD.py:374):
-    // parent_path = slice(path, 1, size-1). Equi-join on the array key — Spark
-    // shuffles both sides on the array hash; at scale, bucket by path hash.
-    "b14_selfjoin_path" -> ((s, d) => {
-      val n = nodesCached(s, d)
-      val child = n.filter(size(col("path")) > 1).select(
-        col("id"), col("value"),
-        slice(col("path"), lit(1), size(col("path")) - 1).as("ppath"))
-      val parent = n.select(col("path").as("ppath"), col("id").as("parent_id"),
-        col("value").as("pvalue"))
-      child.join(parent, "ppath")
-        // `+ 0` normalizes IEEE -0.0 to 0.0 (a negative acctbal rounding to zero
-        // hashes as "-0" in one engine and "0" in the other otherwise)
-        .select(col("id"), col("parent_id"), (round(col("value") / col("pvalue"), 6) + lit(0.0)).as("frac"))
-        .orderBy("id")
-    }),
+    // B14: parent lookup (reference HD.py:374): the load-time ratio-of-parent
+    // column, keyed to the parent's id — the second-to-last callpath element, as
+    // node ids are the last element by construction.
+    "b14_selfjoin_path" -> ((s, d) =>
+      nodesCached(s, d).filter(size(col("callpath")) > 1)
+        .select(col("id"), element_at(col("callpath"), -2).as("parent_id"),
+          ratio("value ratio of parent").as("frac"))
+        .orderBy("id")),
 
-    // A8: ratio-of-total — value / root value (reference HD.py:340-359). The root
-    // scalar is a broadcast one-row cross join, never a collect.
-    "a08_ratio_total" -> ((s, d) => {
-      val n = nodesCached(s, d)
-      val total = n.filter(size(col("path")) === 1)
-        .agg(round(sum("value"), 2).as("total"))
-      n.crossJoin(broadcast(total))
-        .select(col("id"), (round(col("value") / col("total"), 6) + lit(0.0)).as("ratio_total"))
-        .orderBy("id")
-    }),
+    // A8: ratio-of-total — value / root value (reference HD.py:340-359).
+    "a08_ratio_total" -> ((s, d) =>
+      nodesCached(s, d).filter(notRoot)
+        .select(col("id"), ratio("value ratio of total").as("ratio_total"))
+        .orderBy("id")),
 
-    // A9: ratio-of-parent — value / parent value; depth-1 nodes ratio against the
-    // implicit root (= grand total), mirroring the reference where every node's
-    // walk-up terminates at the root row (HD.py:360-385).
-    "a09_ratio_parent" -> ((s, d) => {
-      val n = nodesCached(s, d)
-      val total = n.filter(size(col("path")) === 1)
-        .agg(round(sum("value"), 2).as("total"))
-      val parent = n.select(col("path").as("ppath"), col("value").as("pvalue"))
-      n.select(col("id"), col("value"),
-          slice(col("path"), lit(1), size(col("path")) - 1).as("ppath"))
-        .join(parent, Seq("ppath"), "left")
-        .crossJoin(broadcast(total))
-        .select(col("id"),
-          (round(col("value") / coalesce(col("pvalue"), col("total")), 6) + lit(0.0)).as("ratio_parent"))
-        .orderBy("id")
-    }),
+    // A9: ratio-of-parent — value / parent value; depth-1 nodes divide by the root
+    // (the grand total), as every node's walk-up in the reference terminates at
+    // the root row (HD.py:360-385).
+    "a09_ratio_parent" -> ((s, d) =>
+      nodesCached(s, d).filter(notRoot)
+        .select(col("id"), ratio("value ratio of parent").as("ratio_parent"))
+        .orderBy("id")),
 
-    // A11: callpath prefix filter (`at_paths`, reference HD.py:391-393) — keep rows
-    // whose path starts with [10] (region 0's node).
+    // A11: callpath prefix filter (`at_paths`, reference HD.py:391-393) — the
+    // subtree of region 0's node.
     "a11_at_paths" -> ((s, d) =>
-      nodesCached(s, d)
-        .filter(slice(col("path"), 1, 1) === array(lit(10L)))
+      Ops.atPaths(tree(s, d), prefix = Seq(10L)).df
         .select(col("id"), pathStr.as("path_str"), col("value"))
         .orderBy("id")),
 
     // A12: depth filter (`at_depths`, reference HD.py:395-401).
     "a12_at_depths" -> ((s, d) =>
-      nodesCached(s, d)
-        .filter(size(col("path")).between(2, 3))
-        .select(col("id"), size(col("path")).cast("long").as("depth"))
+      Ops.atDepths(tree(s, d), Some(2), Some(3)).df
+        .select(col("id"), depth.as("depth"))
         .orderBy("id")),
 
-    // A14: hot path — greedy argmax descent (reference HD.py:403-428) as ONE
-    // declarative plan, the hierarchy-side port of hpct.Ops.hotPathOneShot's
-    // rank-window + prefix-explode + count-matches shape (proven equal to the
-    // per-depth argmax loop by ParitySpec on the hpct frames): a node is on the
-    // hot path iff EVERY prefix of its path (itself included) is the rank-1 child
-    // of its sibling group (max value, min id on ties). Zero driver iteration —
-    // no per-depth collect jobs — so the same plan handles depth 25 as depth 3.
-    "a14_hot_path" -> ((s, d) => {
-      // the query's contract descends the 3-level hierarchy (region → nation →
-      // customer), matching the oracle's three greedy CTE levels — the depth cap
-      // the old driver loop carried implicitly. A no-op on this frame (max depth
-      // IS 3) but pinned explicitly so a deeper nodes frame can't silently
-      // diverge from the 3-level oracle; the uncapped formulation is
-      // hpct.Ops.hotPathOneShot.
-      val n = nodesCached(s, d).filter(size(col("path")) <= 3) // shared cache — NOT unpersisted here
-      // rank-1 nodes per sibling group (depth-1 nodes all share the empty parent)
-      val winners = n
-        .withColumn("__parent",
-          slice(col("path"), lit(1), greatest(size(col("path")) - 1, lit(0))))
-        .withColumn("__rk", row_number().over(
-          Window.partitionBy("__parent").orderBy(desc("value"), asc("id"))))
-        .filter(col("__rk") === 1)
-        .select(col("path").as("__winner"))
-      // every node × its path prefixes (O(depth) rows per node)
-      val prefixes = n
-        .select(col("id").as("__nid"), col("path"))
-        .withColumn("__k", explode(sequence(lit(1), size(col("path")))))
-        .select(col("__nid"), size(col("path")).as("__depth"),
-          slice(col("path"), lit(1), col("__k")).as("__winner"))
-      // on the hot path iff ALL prefixes are winners
-      val hotIds = prefixes.join(winners, "__winner")
-        .groupBy("__nid", "__depth").agg(count(lit(1)).as("__hits"))
-        .filter(col("__hits") === col("__depth"))
-        .select(col("__nid").as("id"))
-      n.join(hotIds, Seq("id"), "left_semi")
-        .select(col("id"), pathStr.as("path_str"), col("value"),
-          size(col("path")).cast("long").as("depth"))
-        .orderBy("depth")
-    }),
+    // A14: hot path — greedy argmax descent (reference HD.py:403-428) with no
+    // threshold, so it runs down to a customer leaf: one declarative plan, no
+    // per-depth driver jobs.
+    "a14_hot_path" -> ((s, d) =>
+      Ops.hotPath(tree(s, d), threshold = Double.NegativeInfinity, baseColumn = Some("value")).df
+        .filter(notRoot)
+        .select(col("id"), pathStr.as("path_str"), col("value"), depth.as("depth"))
+        .orderBy("depth")),
 
-    // A15: flame-graph geometry (reference HD.py:430-540): first layer normalized to
-    // 2π; deeper layers sibling-normalized within parent and offset by within-parent
-    // cumulative sum + parent offset. Two window passes + one broadcast join.
-    "a15_flame" -> ((s, d) => {
-      val n = nodesCached(s, d)
-      val twoPi = lit(2.0 * math.Pi)
-      // constant-but-non-foldable partition key: Spark 4's EliminateWindowPartitions
-      // folds a literal key away, leaving an unpartitioned WindowExec whose WARN
-      // drowns real regressions. The input is one tree layer (5 region rows), so the
-      // single partition IS the semantics — this just keeps the spec non-empty.
-      val wAll = Window.partitionBy(col("id") * 0)
-      val l1 = n.filter(size(col("path")) === 1).select(
-        col("id"),
-        (twoPi * col("value") / sum("value").over(wAll)).as("w"),
-        (twoPi * coalesce(
-          sum("value").over(wAll.orderBy("id").rowsBetween(Window.unboundedPreceding, -1)),
-          lit(0.0)) / sum("value").over(wAll)).as("o"))
-      val byParent = Window.partitionBy(col("pk"))
-      val l2base = n.filter(size(col("path")) === 2).select(
-        col("id"), col("value"), element_at(col("path"), 1).as("pk"))
-      val l2 = l2base
-        .join(broadcast(l1.select(col("id").as("pk"), col("w").as("pw"), col("o").as("po"))), "pk")
-        .select(
-          col("id"),
-          (col("pw") * col("value") / sum("value").over(byParent)).as("w"),
-          (col("po") + coalesce(
-            sum("value").over(byParent.orderBy("id").rowsBetween(Window.unboundedPreceding, -1)),
-            lit(0.0)) * col("pw") / sum("value").over(byParent)).as("o"))
-      l1.select(col("id"), lit(1L).as("depth"), round(col("w"), 6).as("width"),
-          round(col("o"), 6).as("x0"))
-        .unionByName(l2.select(col("id"), lit(2L).as("depth"), round(col("w"), 6).as("width"),
-          round(col("o"), 6).as("x0")))
-        .orderBy("depth", "id")
-    }),
+    // A15: flame-graph geometry (reference HD.py:430-540) of the top two layers,
+    // on the node values: the region layer normalized to 2π, each nation within
+    // its region's arc.
+    "a15_flame" -> ((s, d) =>
+      Ops.flameGeometry(tree(s, d), column = Some("value"), maxDepth = Some(2))
+        .select(col("id"), col("depth").cast("long").as("depth"),
+          round(col("width"), 6).as("width"), round(col("x0"), 6).as("x0"))
+        .orderBy("depth", "id")),
   )
 
   val oracles: Map[String, String] = Map(

@@ -830,12 +830,16 @@ object TextOps {
   private def stageRootBase: String =
     sys.env.getOrElse("SPARK_GRAFT_STAGE_DIR", sys.props("java.io.tmpdir"))
 
+  /** The per-(session, input dir) directory name under a staged operator's root:
+    * the session's and the dir's hash codes packed into 16 hex digits.
+    */
+  private[graft] def stageKey(s: SparkSession, d: String): String =
+    f"${(s.hashCode.toLong << 32 | (d.hashCode.toLong & 0xffffffffL))}%016x"
+
   private[graft] def cleanCorpusStaged(s: SparkSession, d: String,
       stageRoot: Option[String] = None): DataFrame = {
     registerKernels(s)
-    val root = stageRoot.getOrElse(
-      s"$stageRootBase/graft-d10-staged/" +
-        f"${(s.hashCode.toLong << 32 | (d.hashCode.toLong & 0xffffffffL))}%016x")
+    val root = stageRoot.getOrElse(s"$stageRootBase/graft-d10-staged/${stageKey(s, d)}")
     def stage(name: String, df: DataFrame): DataFrame = {
       val p = s"$root/$name.parquet"
       df.write.mode("overwrite").parquet(p)
@@ -897,8 +901,7 @@ object TextOps {
         // contract, r20), overwritten on re-invocation (repeated bench reps
         // don't accumulate copies; the returned frame reads the boundary, so
         // nothing here deletes it)
-        val p = s"$stageRootBase/graft-d09-staged/" +
-          f"${(s.hashCode.toLong << 32 | (d.hashCode.toLong & 0xffffffffL))}%016x/edges.parquet"
+        val p = s"$stageRootBase/graft-d09-staged/${stageKey(s, d)}/edges.parquet"
         edges0.write.mode("overwrite").parquet(p)
         s.read.parquet(p)
       }

@@ -1,25 +1,56 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The `spark.sql.extensions=graft.GraftExtensions` deployment path must resolve both
-  * native functions in a session that never called the per-session `register`s.
+/** The `spark.sql.extensions=graft.GraftExtensions` deployment path must resolve every
+  * native function in a session that never called the per-session `register`s.
   */
 class GraftExtensionsSpec extends AnyFunSuite {
 
-  test("GraftExtensions injects token_hash16 and vec_dot into a fresh session") {
+  /** Run `f` on a NEW session over the shared SparkContext, built with the graft
+    * extensions only. getOrCreate returns the active/default session (extensions
+    * silently ignored) unless both are cleared; the shared session is restored
+    * afterwards — and never stop() here, the SparkContext is shared by every suite
+    * in this JVM.
+    */
+  private def withExtensionsSession(f: SparkSession => Unit): Unit = {
     val base = SparkTestBase.spark // ensure the shared SparkContext exists first
-    // getOrCreate returns the active/default session (extensions silently ignored)
-    // unless both are cleared; the builder then makes a NEW session over the same
-    // SparkContext. Restore the shared session afterwards — and never stop() here,
-    // the SparkContext is shared by every suite in this JVM.
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
     try {
       val s = SparkSession.builder().master("local[4]")
         .withExtensions(new GraftExtensions()).getOrCreate()
       assert(s ne base, "expected a fresh session, got the shared one")
+      f(s)
+    } finally {
+      SparkSession.setDefaultSession(base)
+      SparkSession.setActiveSession(base)
+    }
+  }
+
+  /** Every `graft.functions` object with a `register(SparkSession)` method, found on
+    * the classpath, so a kernel added later cannot be left out of the check.
+    */
+  private def kernelRegisters: Seq[(String, SparkSession => Unit)] = {
+    // the main classes directory (test-classes has a graft/functions of its own)
+    val root = classOf[graft.functions.VecDot].getProtectionDomain.getCodeSource.getLocation
+    val dir = new java.io.File(new java.io.File(root.toURI), "graft/functions")
+    assert(dir.isDirectory, s"graft.functions is not a class directory under $root")
+    dir.list().toSeq.sorted
+      .filter(_.matches("[A-Za-z0-9]+\\$\\.class"))
+      .flatMap { file =>
+        val cls = Class.forName("graft.functions." + file.stripSuffix(".class"))
+        scala.util.Try(cls.getMethod("register", classOf[SparkSession])).toOption.map { m =>
+          val module = cls.getField("MODULE$").get(null)
+          cls.getSimpleName.stripSuffix("$") -> ((s: SparkSession) => { m.invoke(module, s); () })
+        }
+      }
+  }
+
+  test("GraftExtensions injects token_hash16 and vec_dot into a fresh session") {
+    withExtensionsSession { s =>
       val row = s.sql(
         "SELECT token_hash16('hello'), token_hash16('hello', 3), " +
           "vec_dot(array(CAST(1.0 AS FLOAT), CAST(2.0 AS FLOAT)), " +
@@ -42,9 +73,29 @@ class GraftExtensionsSpec extends AnyFunSuite {
       assert(agg.getLong(0) === 3L)
       assert(agg.getInt(1) === 1)
       assert(agg.getInt(2) === 2)
-    } finally {
-      SparkSession.setDefaultSession(base)
-      SparkSession.setActiveSession(base)
+    }
+  }
+
+  test("every graft.functions kernel with a register(spark) resolves in an extensions-only session") {
+    val kernels = kernelRegisters
+    assert(kernels.length >= 13, kernels.map(_._1))
+    // the function names each register call adds, read off a plain session
+    val plain = SparkTestBase.spark.newSession()
+    val names: Seq[(String, String)] = kernels.flatMap { case (kernel, register) =>
+      val before = plain.sessionState.functionRegistry.listFunction().toSet
+      register(plain)
+      val added = plain.sessionState.functionRegistry.listFunction().toSet -- before
+      assert(added.nonEmpty, s"$kernel.register added no function")
+      added.toSeq.map(id => kernel -> id.funcName)
+    }
+    withExtensionsSession { s =>
+      val missing = names.filterNot { case (_, fn) =>
+        s.sessionState.functionRegistry.functionExists(FunctionIdentifier(fn))
+      }
+      assert(missing.isEmpty, s"not injected by GraftExtensions: $missing")
+      // and an injected kernel evaluates: intersect_count over non-null arrays
+      assert(s.sql("SELECT intersect_count(array(1L, 2L, 3L), array(2L, 3L, 4L))")
+        .head().getLong(0) === 2L)
     }
   }
 }

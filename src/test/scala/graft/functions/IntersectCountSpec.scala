@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, LongType}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.{Gen, Prop, Test => ScTest}
 import graft.SparkTestBase.spark
@@ -58,6 +59,27 @@ class IntersectCountSpec extends AnyFunSuite {
         .collect()
     }
     assert(e.getMessage.contains("non-null elements"))
+  }
+
+  test("the type-check failure names the fix, and both named fixes resolve") {
+    IntersectCount.register(spark)
+    val e = intercept[org.apache.spark.sql.AnalysisException] {
+      Seq(("x")).toDF("t")
+        .select(expr("intersect_count(array(1L, null, 2L), array(2L, 3L))"))
+        .collect()
+    }
+    assert(e.getMessage.contains("array_compact(...)"), e.getMessage)
+    assert(e.getMessage.contains("cast to array<bigint> with containsNull = false"), e.getMessage)
+    val compacted = Seq(("x")).toDF("t")
+      .select(expr("intersect_count(array_compact(array(1L, null, 2L)), array(2L, 3L))"))
+      .head().getLong(0)
+    assert(compacted === 1L)
+    // an array<int> with non-nullable elements casts to the kernel's input type
+    val cast = Seq(Seq(1, 2, 3)).toDF("a")
+      .select(col("a").cast(ArrayType(LongType, containsNull = false)).as("a"))
+    assert(cast.schema("a").dataType === ArrayType(LongType, containsNull = false))
+    val k = cast.select(expr("intersect_count(a, array(2L, 3L))")).head().getLong(0)
+    assert(k === 2L)
   }
 
   test("property: agreement on random distinct long arrays") {

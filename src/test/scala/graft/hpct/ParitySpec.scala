@@ -4,14 +4,16 @@ import java.io.File
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType, StringType, StructField, StructType}
 import graft.SparkTestBase.spark
 
 /** Reference-parity end-to-end tests over the two HPCToolkit fixture XMLs, checked
   * against golden outputs computed by RUNNING THE REFERENCE (committed at
   * src/test/resources/golden/). Ports the reference's behavioral suite
   * (/root/reference/test/test_hpctoolkit_dataframe.py:34-60) and adds the full-frame
-  * golden compare + SURVEY §5 invariants the reference never had.
+  * golden compare + SURVEY §5 invariants the reference never had. The equivalence
+  * tests of the one-plan operators against their driver-loop baselines
+  * ([[IterativeOps]]) also run on a seeded synthetic tree, so they need no fixture.
   */
 class ParitySpec extends AnyFunSuite {
 
@@ -21,6 +23,58 @@ class ParitySpec extends AnyFunSuite {
 
   private lazy val pf1 = ProfileLoad.load(spark, fixture(1))
   private lazy val pf2 = ProfileLoad.load(spark, fixture(2))
+
+  /** A seeded synthetic profile, so the equivalence tests also run without the
+    * fixtures: a few thousand nodes, 14 levels deep. Each inner node passes most of
+    * its value to one dominant child, so the greedy descent goes deep before a
+    * child drops below the threshold; in about a third of the sibling groups the
+    * two largest children are exactly equal, and ids are drawn from a shuffled
+    * pool, so the lower id must break the tie wherever it falls. `callpath` holds
+    * the ancestor ids, as a loaded profile's does.
+    */
+  private lazy val seeded: ProfileFrame = {
+    val rng = new scala.util.Random(20240611L)
+    val maxDepth = 14
+    val maxNodes = 6000
+    val ids = rng.shuffle((1L to maxNodes).toVector).iterator
+    val rows = scala.collection.mutable.ArrayBuffer(
+      Row(Model.RootId, Seq.empty[Long], 1.0, 1.0, "root"))
+    var frontier = Vector((Seq.empty[Long], 1.0))
+    while (frontier.nonEmpty) {
+      frontier = frontier.flatMap { case (path, v) =>
+        val k =
+          if (path.length >= maxDepth) 0
+          else if (path.length < 3) 4 + rng.nextInt(3)
+          else if (v > 1e-4) 1 + rng.nextInt(3)
+          else rng.nextInt(2)
+        val shares: Seq[Double] =
+          if (k == 0) Nil
+          else if (k >= 2 && rng.nextDouble() < 0.35) Seq(0.45, 0.45) ++ Seq.fill(k - 2)(0.1 / k)
+          else {
+            val top = 0.55 + 0.4 * rng.nextDouble()
+            top +: Seq.fill(k - 1)((1 - top) * rng.nextDouble() / k)
+          }
+        shares.flatMap { r =>
+          if (!ids.hasNext) None
+          else {
+            val id = ids.next()
+            rows += Row(id, path :+ id, v * r, r, s"p$id")
+            Some((path :+ id, v * r))
+          }
+        }
+      }
+    }
+    val schema = StructType(Seq(
+      StructField("id", LongType, nullable = false),
+      StructField("callpath", ArrayType(LongType, containsNull = false), nullable = false),
+      StructField("v ratio of total", DoubleType),
+      StructField("v ratio of parent", DoubleType),
+      StructField("procedure", StringType)))
+    val meta = ProfileMeta("seeded-tree", Seq(0 -> "v"), Map.empty, Map.empty, Map.empty,
+      Map.empty, percentageColumn = "v", hotPathColumn = "v ratio of total",
+      compactColumns = Seq("procedure", "id"))
+    ProfileFrame(spark.createDataFrame(spark.sparkContext.parallelize(rows.toSeq, 4), schema), meta)
+  }
 
   private def goldenPath(name: String): String =
     getClass.getResource(s"/golden/$name").getPath
@@ -40,6 +94,61 @@ class ParitySpec extends AnyFunSuite {
 
   private def relEq(a: Double, b: Double, tol: Double = 1e-9): Boolean =
     (a.isNaN && b.isNaN) || a == b || math.abs(a - b) <= tol * math.max(1.0, math.max(math.abs(a), math.abs(b)))
+
+  private def hotIds(pf: ProfileFrame): Array[Long] =
+    pf.df.select("id").collect().map(_.getLong(0)).sorted
+
+  /** [[Ops.hotPath]] from the root equals the driver loop at two thresholds. */
+  private def assertHotPathAgreesFromRoot(pf: ProfileFrame): Unit =
+    for (th <- Seq(0.05, 0.01)) {
+      val loop = hotIds(IterativeOps.hotPathIterative(pf, threshold = th))
+      assert(hotIds(Ops.hotPath(pf, threshold = th)) === loop, s"${pf.meta.dbPath} th=$th")
+    }
+
+  /** [[Ops.hotPath]] from a mid-path start (the depth-2 node of the root-start hot
+    * path) equals the driver loop at three thresholds.
+    */
+  private def assertHotPathAgreesFromPrefix(pf: ProfileFrame): Unit = {
+    val start = IterativeOps.hotPathIterative(pf).df
+      .filter(size(col("callpath")) === 2)
+      .select("callpath").head().getSeq[Long](0).toSeq
+    // 2.0 is above every value: the path is the start alone
+    for (th <- Seq(0.05, 0.01, 2.0)) {
+      val loop = hotIds(IterativeOps.hotPathIterative(pf, callpath = start, threshold = th))
+      assert(hotIds(Ops.hotPath(pf, callpath = start, threshold = th)) === loop,
+        s"${pf.meta.dbPath} start=$start th=$th")
+    }
+  }
+
+  /** [[Ops.flameGeometry]] equals the layer-join loop, over the whole tree and over
+    * the depth window 3..6 (which hits both the global-group and per-parent
+    * normalization paths).
+    */
+  private def assertFlameAgrees(pf: ProfileFrame): Unit = {
+    def canon(df: org.apache.spark.sql.DataFrame) = df
+      .select("id", "depth", "x0", "width", "labeled")
+      .collect()
+      .map(r => (r.getLong(0), r.getInt(1)) ->
+        (r.getDouble(2), r.getDouble(3), r.getBoolean(4)))
+      .toMap
+    val key = pf.meta.dbPath
+    val loop = canon(IterativeOps.flameGeometryIterative(pf))
+    val oneShot = canon(Ops.flameGeometry(pf))
+    assert(oneShot.keySet === loop.keySet, s"$key: node/layer set differs")
+    oneShot.foreach { case (k, (x, w, l)) =>
+      val (lx, lw, ll) = loop(k)
+      // the unrolled product re-associates the float multiplies; 1e-9 relative
+      assert(relEq(x, lx) && relEq(w, lw) && l === ll,
+        s"$key $k: one-shot ($x,$w,$l) vs loop ($lx,$lw,$ll)")
+    }
+    val loopW = canon(IterativeOps.flameGeometryIterative(pf, minDepth = Some(3), maxDepth = Some(6)))
+    val oneW = canon(Ops.flameGeometry(pf, minDepth = Some(3), maxDepth = Some(6)))
+    assert(oneW.keySet === loopW.keySet, s"$key: bounded node/layer set differs")
+    oneW.foreach { case (k, (x, w, _)) =>
+      val (lx, lw, _) = loopW(k)
+      assert(relEq(x, lx) && relEq(w, lw), s"$key bounded $k")
+    }
+  }
 
   /** Full-frame compare of a loaded ProfileFrame against its reference dump. */
   private def assertMatchesGolden(pf: ProfileFrame, goldenName: String): Unit = {
@@ -118,32 +227,44 @@ class ParitySpec extends AnyFunSuite {
       2935, 2987, 3209, 3211, 3236).sorted)
   }
 
-  test("one-shot hot path equals the driver-loop hot path (both fixtures, two thresholds)") {
-    assume(hasFixtures)
-    for (pf <- Seq(pf1, pf2); th <- Seq(0.05, 0.01)) {
-      val loop = Ops.hotPathIterative(pf, threshold = th).df
-        .select("id").collect().map(_.getLong(0)).sorted
-      val oneShot = Ops.hotPathOneShot(pf, threshold = th).df
-        .select("id").collect().map(_.getLong(0)).sorted
-      assert(oneShot === loop, s"${pf.meta.dbPath} th=$th")
-    }
+  /** The seeded tree, plus both fixtures when they are present. */
+  private def equivalenceFrames: Seq[ProfileFrame] =
+    if (hasFixtures) Seq(seeded, pf1, pf2)
+    else { info("fixtures absent: seeded tree only"); Seq(seeded) }
+
+  test("hot path equals the driver loop from the root, two thresholds (seeded tree; fixtures when present)") {
+    equivalenceFrames.foreach(assertHotPathAgreesFromRoot)
+    // without the root row the descent still starts at the empty callpath
+    assertHotPathAgreesFromRoot(Ops.atDepths(seeded, minDepth = Some(1)))
   }
 
-  test("one-shot hot path equals the driver loop from a prefix start (both fixtures)") {
-    assume(hasFixtures)
-    for (pf <- Seq(pf1, pf2)) {
-      // restart from a mid-path node: the 3rd node of the root-start hot path
-      val start = Ops.hotPathIterative(pf).df
-        .filter(size(col("callpath")) === 2)
-        .select("callpath").head().getSeq[Long](0).toSeq
-      for (th <- Seq(0.05, 0.01)) {
-        val loop = Ops.hotPathIterative(pf, callpath = start, threshold = th).df
-          .select("id").collect().map(_.getLong(0)).sorted
-        val oneShot = Ops.hotPathOneShot(pf, threshold = th, start = start).df
-          .select("id").collect().map(_.getLong(0)).sorted
-        assert(oneShot === loop, s"${pf.meta.dbPath} start=$start th=$th")
-      }
-    }
+  test("hot path equals the driver loop from a prefix start (seeded tree; fixtures when present)") {
+    equivalenceFrames.foreach(assertHotPathAgreesFromPrefix)
+  }
+
+  test("seeded tree has the shape the equivalence tests rely on") {
+    val df = seeded.df
+    val n = df.count()
+    val maxDepth = df.agg(max(size(col("callpath")))).head().getInt(0)
+    assert(n >= 2000 && n < 6000, s"$n nodes") // below the id cap: not truncated
+    assert(maxDepth >= 8)
+    // at threshold 0.05 the descent stops at a node whose top child is below it
+    val hot = Ops.hotPath(seeded, threshold = 0.05).df
+    val leaf = hot.select("callpath").collect().map(_.getSeq[Long](0)).maxBy(_.length)
+    val kids = df.filter(size(col("callpath")) === leaf.length + 1 &&
+      slice(col("callpath"), 1, leaf.length) === lit(leaf.toArray))
+    assert(leaf.length >= 4 && kids.count() > 0)
+    assert(kids.agg(max("v ratio of total")).head().getDouble(0) < 0.05)
+    // the descent passes a tie: a hot node has an equal-valued sibling with a
+    // higher id, so the lower id had to win
+    def parent(c: String) = slice(col(c), lit(1), size(col(c)) - 1)
+    val h = hot.filter(size(col("callpath")) > 0).select(col("id").as("hid"),
+      col("callpath").as("hpath"), col("v ratio of total").as("hv"))
+    val tiedSiblings = df.filter(size(col("callpath")) > 0)
+      .join(h, parent("callpath") === parent("hpath") &&
+        col("v ratio of total") === col("hv") && col("id") > col("hid"))
+    assert(tiedSiblings.count() > 0)
+    info(s"$n nodes, max depth $maxDepth, hot path (0.05) to depth ${leaf.length}")
   }
 
   test("hot-path leaf is the reference's leaf") {
@@ -215,34 +336,8 @@ class ParitySpec extends AnyFunSuite {
     }
   }
 
-  test("one-shot flame geometry equals the layer-join formulation on both fixtures") {
-    assume(hasFixtures)
-    for ((pf, key) <- Seq((pf1, "experiment1"), (pf2, "experiment2"))) {
-      def canon(df: org.apache.spark.sql.DataFrame) = df
-        .select("id", "depth", "x0", "width", "labeled")
-        .collect()
-        .map(r => (r.getLong(0), r.getInt(1)) ->
-          (r.getDouble(2), r.getDouble(3), r.getBoolean(4)))
-        .toMap
-      val loop = canon(Ops.flameGeometryIterative(pf))
-      val oneShot = canon(Ops.flameGeometryOneShot(pf))
-      assert(oneShot.keySet === loop.keySet, s"$key: node/layer set differs")
-      oneShot.foreach { case (k, (x, w, l)) =>
-        val (lx, lw, ll) = loop(k)
-        // the unrolled product re-associates the float multiplies; 1e-9 relative
-        assert(relEq(x, lx) && relEq(w, lw) && l === ll,
-          s"$key $k: one-shot ($x,$w,$l) vs loop ($lx,$lw,$ll)")
-      }
-      // spot-check a restricted window too (prefix + depth bounds hit both the
-      // global-group and per-parent normalization paths)
-      val loopW = canon(Ops.flameGeometryIterative(pf, minDepth = Some(3), maxDepth = Some(6)))
-      val oneW = canon(Ops.flameGeometryOneShot(pf, minDepth = Some(3), maxDepth = Some(6)))
-      assert(oneW.keySet === loopW.keySet, s"$key: bounded node/layer set differs")
-      oneW.foreach { case (k, (x, w, _)) =>
-        val (lx, lw, _) = loopW(k)
-        assert(relEq(x, lx) && relEq(w, lw), s"$key bounded $k")
-      }
-    }
+  test("flame geometry equals the layer-join loop, full and windowed (seeded tree; fixtures when present)") {
+    equivalenceFrames.foreach(assertFlameAgrees)
   }
 
   test("flame-graph geometry matches the reference layer by layer") {

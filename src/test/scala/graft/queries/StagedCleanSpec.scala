@@ -60,8 +60,8 @@ class StagedCleanSpec extends AnyFunSuite {
     // writes (r20 ADVICE: scanning every subdirectory would let a stale
     // boundary from a previous run satisfy the assertion even if this run
     // wrote nothing)
-    val key = f"${(spark.hashCode.toLong << 32 | (sf001.hashCode.toLong & 0xffffffffL))}%016x"
-    val edges = new java.io.File(s"$base/graft-d09-staged/$key/edges.parquet")
+    val edges = new java.io.File(
+      s"$base/graft-d09-staged/${TextOps.stageKey(spark, sf001)}/edges.parquet")
     assert(edges.exists(), s"no edges.parquet at ${edges.getPath}")
   }
 
