@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 /** Benchmark main: times every registered query on SPARK_GRAFT_SF_DIR and prints one
   * JSON line. A query that throws is REPORTED (per-query "err" + nonzero exit), never
   * silently timed at ~0 — a bench that can't distinguish broken from fast is worse
@@ -38,21 +37,49 @@ object Bench {
       cleanMedian: Double = cleanCalibrationSec): Boolean =
     calibration > 2.0 * cleanMedian
 
+  /** JSON string-content escape: quote and backslash escaped, control chars
+    * replaced by a space.
+    */
+  private def esc(s: String): String = s.flatMap {
+    case '"' => "\\\""
+    case '\\' => "\\\\"
+    case c if c < ' ' => " "
+    case c => c.toString
+  }
+
+  /** One query's entry in the per-query map. */
+  private[graft] final case class QueryRow(name: String, sec: Double,
+      err: Option[String], contended: Boolean)
+
+  /** The per-query map with seconds rendered by `fmt`: a clean row is a plain
+    * number, a contended row `{"sec":…,"contended":true}`, a failed row
+    * `{"err":…}` — so existing tooling parses clean rows unchanged.
+    */
+  private def queriesJson(rows: Seq[QueryRow], fmt: Double => String): String =
+    rows.map {
+      case QueryRow(k, _, Some(e), _) => s"\"${esc(k)}\":{\"err\":\"${esc(e)}\"}"
+      case QueryRow(k, v, None, true) => s"\"${esc(k)}\":{\"sec\":${fmt(v)},\"contended\":true}"
+      case QueryRow(k, v, None, false) => s"\"${esc(k)}\":${fmt(v)}"
+    }.mkString("{", ",", "}")
+
+  /** THE stdout contract line: metric/value/unit/queries/sf per the bench
+    * contract, plus failed/n_queries/contended_run, seconds at ms precision.
+    * Formats under `Locale.ROOT` itself, so a comma-decimal JVM default
+    * cannot corrupt the machine-parsed line.
+    */
+  private[graft] def contractLine(rows: Seq[QueryRow], total: Double, sf: String,
+      contendedRun: Boolean): String = {
+    def ms(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
+    s"""{"metric":"total","value":${ms(total)},"unit":"sec","queries":${queriesJson(rows, ms)},"sf":"${esc(sf)}","failed":${rows.count(_.err.isDefined)},"n_queries":${rows.length},"contended_run":$contendedRun}"""
+  }
+
   def main(args: Array[String]): Unit = {
     JvmCheck.warnIfModulesClosed()
     // f"...%.3f" is default-locale-sensitive; a comma decimal separator
     // would silently corrupt the machine-parsed JSON lines below
     java.util.Locale.setDefault(java.util.Locale.ROOT)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(defaultCpus = 32)
     // Advisory, before ~20 min of sweep can die in b06: the measured
     // 1 GB-heap-per-task wall for large sorted-output queries (Sizing).
     graft.queries.Sizing.adviseTaskMemory(spark)
@@ -138,12 +165,6 @@ object Bench {
         f"${2.0 * cleanCalibrationSec}%.1f s (2x the clean-box median " +
         f"~${cleanCalibrationSec}%.1f s) - this run is CONTENDED; re-run " +
         "before recording its walls (verify skill, contention gate)")
-    def esc(s: String): String = s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => " "
-      case c => c.toString
-    }
     var failed = List.empty[String]
     // Build the shared cached intermediates (hierarchy nodes, shingles/bands/simhash)
     // up front and report the cost as its own line item, so the alphabetically-first
@@ -359,13 +380,10 @@ object Bench {
     // per-query map ("parsed": null in every committed BENCH_r*.json). At
     // %.3f the whole 70-query contract line is ~1.75k chars and survives
     // the window intact.
-    def qsJson(fmt: Double => String): String = results.map {
-      case (k, v, None, mid, _, _, _) if !midMedian.isNaN && mid > 2 * midMedian =>
-        s"\"${esc(k)}\":{\"sec\":${fmt(v)},\"contended\":true}"
-      case (k, v, None, _, _, _, _) => s"\"${esc(k)}\":${fmt(v)}"
-      case (k, _, Some(e), _, _, _, _) => s"\"${esc(k)}\":{\"err\":\"${esc(e)}\"}"
-    }.mkString("{", ",", "}")
-    val qs = qsJson(v => v.toString)
+    val rows = results.map { case (k, v, err, mid, _, _, _) =>
+      QueryRow(k, v, err, err.isEmpty && !midMedian.isNaN && mid > 2 * midMedian)
+    }
+    val qs = queriesJson(rows, _.toString)
     // per-query executor spill (memory+disk) and shuffle-write deltas, MB —
     // the memory-pressure signal the contended flag's CPU probe cannot see
     val spillJson = results
@@ -419,10 +437,8 @@ object Bench {
     // contract line fits the window whole; full precision lives in the
     // archive and this stderr line.
     System.err.println(s"BENCHDIAG $fullJson")
-    // THE contract line, printed last: metric/value/unit/queries/sf per the
-    // driver contract, plus failed/n_queries/contended_run. Per-query values
-    // rounded to ms (see qsJson); methodology unchanged.
-    println(f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":${qsJson(v => f"$v%.3f")},"sf":"$sfDir","failed":${failed.length},"n_queries":${results.length},"contended_run":$contendedRun}""")
+    // THE contract line, printed last (see [[contractLine]])
+    println(contractLine(rows, total, sfDir, contendedRun))
     Caches.clearAll()
     spark.stop()
     if (failed.nonEmpty) sys.exit(1)

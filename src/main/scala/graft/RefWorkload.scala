@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** The reference's own published workload (performance.ipynb cells 2–5, the only
   * numbers it publishes — BASELINE.md): load BOTH fixture XMLs with
@@ -34,14 +34,7 @@ object RefWorkload {
       println("""{"metric":"ref_workload","err":"fixtures not present"}""")
       return
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(defaultCpus = 32)
 
     def force(df: DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()

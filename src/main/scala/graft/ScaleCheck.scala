@@ -252,13 +252,7 @@ object ScaleCheck {
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
       .getOrElse(AllTables)
     val repOffset = sys.env.getOrElse("SPARK_GRAFT_SCALE_REP_OFFSET", "0").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(defaultCpus = 32)
 
     val dstName = new java.io.File(dst).getName
     // The marker records the synthesis SCHEME and reps, not just existence: a
@@ -451,7 +445,7 @@ object ScaleCheck {
     // doc_id / mod: ids are dense 0-based per source corpus, and every
     // synthesis stride is a multiple of the source size.
     {
-      val mod = sys.env.getOrElse("SPARK_GRAFT_RESIDUE_MOD", "5000").toLong
+      val mod = graft.queries.Knobs.int("SPARK_GRAFT_RESIDUE_MOD").getOrElse(5000).toLong
       val docs = graft.queries.Tables.documents(spark, dst).count()
       val ((same, cross), sec) = timed {
         val m = graft.queries.TextOps.candidatePairs(spark, dst)

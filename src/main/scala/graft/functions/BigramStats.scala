@@ -1,11 +1,10 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, GenericInternalRow, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -99,13 +98,9 @@ case class BigramStats(child: Expression) extends UnaryExpression {
 }
 
 object BigramStats {
+  /** The function's one registry entry, shared with GraftExtensions. */
+  val entry: FunctionEntry = FunctionEntry.unary("bigram_stats", classOf[BigramStats])(BigramStats(_))
+
   /** Idempotently register `bigram_stats(text)`. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("bigram_stats"),
-      new ExpressionInfo(classOf[BigramStats].getName, "bigram_stats"),
-      (args: Seq[Expression]) => {
-        require(args.length == 1, "bigram_stats takes one argument")
-        BigramStats(args.head)
-      })
+  def register(spark: SparkSession): Unit = entry.register(spark)
 }

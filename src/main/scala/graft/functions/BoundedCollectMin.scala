@@ -3,11 +3,10 @@ package graft.functions
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, GenericInternalRow, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.{GenericArrayData, TypeUtils}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StructField, StructType}
@@ -162,13 +161,13 @@ case class BoundedCollectMin(
 }
 
 object BoundedCollectMin {
-  /** The one function-registry builder, shared by [[register]] and
-    * GraftExtensions.injectFunction so the literal-parsing rules cannot
-    * drift. `limit` must be a foldable positive in-Int-range integer
-    * literal (it sizes the aggregation buffer, so a per-row value is
-    * meaningless) — an out-of-range Long like 4294967297L is REJECTED, not
-    * silently truncated to 1 (the pre-r18 `l.toInt` would have shrunk the
-    * retained state drastically while passing the >= 1 require).
+  /** The one function-registry builder ([[entry]]'s), so the literal-parsing
+    * rules cannot drift between [[register]] and GraftExtensions. `limit`
+    * must be a foldable positive in-Int-range integer literal (it sizes the
+    * aggregation buffer, so a per-row value is meaningless) — an
+    * out-of-range Long like 4294967297L is REJECTED, not silently truncated
+    * to 1 (the pre-r18 `l.toInt` would have shrunk the retained state
+    * drastically while passing the >= 1 require).
     */
   def build(args: Seq[Expression]): BoundedCollectMin = {
     require(args.length == 2, "bounded_collect_min takes (value, limit)")
@@ -189,10 +188,10 @@ object BoundedCollectMin {
     BoundedCollectMin(args.head, l)
   }
 
+  /** The function's one registry entry, shared with GraftExtensions. */
+  val entry: FunctionEntry =
+    FunctionEntry("bounded_collect_min", classOf[BoundedCollectMin])(build)
+
   /** Idempotently register `bounded_collect_min(v, limit)`. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("bounded_collect_min"),
-      new ExpressionInfo(classOf[BoundedCollectMin].getName, "bounded_collect_min"),
-      build(_))
+  def register(spark: SparkSession): Unit = entry.register(spark)
 }

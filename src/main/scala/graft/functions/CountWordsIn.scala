@@ -1,10 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -88,13 +87,9 @@ case class CountWordsIn(left: Expression, right: Expression) extends BinaryExpre
 }
 
 object CountWordsIn {
+  /** The function's one registry entry, shared with GraftExtensions. */
+  val entry: FunctionEntry = FunctionEntry.binary("count_words_in", classOf[CountWordsIn])(CountWordsIn(_, _))
+
   /** Idempotently register `count_words_in(text, words_csv)`. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("count_words_in"),
-      new ExpressionInfo(classOf[CountWordsIn].getName, "count_words_in"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2, "count_words_in takes two arguments")
-        CountWordsIn(args.head, args(1))
-      })
+  def register(spark: SparkSession): Unit = entry.register(spark)
 }

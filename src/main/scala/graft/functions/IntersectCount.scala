@@ -1,7 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
@@ -122,27 +121,18 @@ case class IntersectCount(left: Expression, right: Expression)
 }
 
 object IntersectCount {
-  /** The function's registry entry, shared by [[register]] and
-    * GraftExtensions.injectFunction.
+  /** The function's one registry entry, shared with GraftExtensions; its
+    * info carries the usage text.
     */
-  val info: ExpressionInfo =
-    new ExpressionInfo(classOf[IntersectCount].getName, null, "intersect_count",
-      "_FUNC_(a, b) - distinct-intersection cardinality of two " +
-        "array<bigint> columns with non-null elements. Contract: elements " +
-        "within each array are DISTINCT (ShingleHashes output); duplicate " +
-        "probe-side elements each count, diverging from " +
-        "size(array_intersect(a, b)).", "")
-
-  /** The one function-registry builder, shared by [[register]] and
-    * GraftExtensions.injectFunction.
-    */
-  def build(args: Seq[Expression]): IntersectCount = {
-    require(args.length == 2, "intersect_count takes two arguments")
-    IntersectCount(args.head, args(1))
-  }
+  val entry: FunctionEntry =
+    FunctionEntry.binary("intersect_count", classOf[IntersectCount])(IntersectCount(_, _))
+      .copy(info = new ExpressionInfo(classOf[IntersectCount].getName, null, "intersect_count",
+        "_FUNC_(a, b) - distinct-intersection cardinality of two " +
+          "array<bigint> columns with non-null elements. Contract: elements " +
+          "within each array are DISTINCT (ShingleHashes output); duplicate " +
+          "probe-side elements each count, diverging from " +
+          "size(array_intersect(a, b)).", ""))
 
   /** Idempotently register `intersect_count(a, b)`. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("intersect_count"), info, build(_))
+  def register(spark: SparkSession): Unit = entry.register(spark)
 }

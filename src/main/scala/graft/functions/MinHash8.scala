@@ -1,11 +1,10 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, GenericInternalRow, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.types.{DataType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -127,13 +126,9 @@ case class MinHash8(child: Expression) extends UnaryExpression {
 }
 
 object MinHash8 {
+  /** The function's one registry entry, shared with GraftExtensions. */
+  val entry: FunctionEntry = FunctionEntry.unary("minhash8", classOf[MinHash8])(MinHash8(_))
+
   /** Idempotently register `minhash8(text)`. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("minhash8"),
-      new ExpressionInfo(classOf[MinHash8].getName, "minhash8"),
-      (args: Seq[Expression]) => {
-        require(args.length == 1, "minhash8 takes one argument")
-        MinHash8(args.head)
-      })
+  def register(spark: SparkSession): Unit = entry.register(spark)
 }

@@ -1,10 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -64,13 +63,9 @@ case class NormalizeText(child: Expression) extends UnaryExpression {
 }
 
 object NormalizeText {
+  /** The function's one registry entry, shared with GraftExtensions. */
+  val entry: FunctionEntry = FunctionEntry.unary("normalize_text", classOf[NormalizeText])(NormalizeText(_))
+
   /** Idempotently register `normalize_text(text)`. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("normalize_text"),
-      new ExpressionInfo(classOf[NormalizeText].getName, "normalize_text"),
-      (args: Seq[Expression]) => {
-        require(args.length == 1, "normalize_text takes one argument")
-        NormalizeText(args.head)
-      })
+  def register(spark: SparkSession): Unit = entry.register(spark)
 }

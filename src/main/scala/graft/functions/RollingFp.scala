@@ -1,11 +1,10 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, GenericInternalRow, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -153,13 +152,9 @@ case class RollingFp(child: Expression) extends UnaryExpression {
 }
 
 object RollingFp {
+  /** The function's one registry entry, shared with GraftExtensions. */
+  val entry: FunctionEntry = FunctionEntry.unary("rolling_fp", classOf[RollingFp])(RollingFp(_))
+
   /** Idempotently register `rolling_fp(text)`. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("rolling_fp"),
-      new ExpressionInfo(classOf[RollingFp].getName, "rolling_fp"),
-      (args: Seq[Expression]) => {
-        require(args.length == 1, "rolling_fp takes one argument")
-        RollingFp(args.head)
-      })
+  def register(spark: SparkSession): Unit = entry.register(spark)
 }

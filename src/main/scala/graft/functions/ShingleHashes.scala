@@ -1,10 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression, UnsafeArrayData, XxHash64Function}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData, XxHash64Function}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -103,13 +102,9 @@ case class ShingleHashes(child: Expression) extends UnaryExpression {
 }
 
 object ShingleHashes {
+  /** The function's one registry entry, shared with GraftExtensions. */
+  val entry: FunctionEntry = FunctionEntry.unary("shingle_hashes", classOf[ShingleHashes])(ShingleHashes(_))
+
   /** Idempotently register `shingle_hashes(text)`. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("shingle_hashes"),
-      new ExpressionInfo(classOf[ShingleHashes].getName, "shingle_hashes"),
-      (args: Seq[Expression]) => {
-        require(args.length == 1, "shingle_hashes takes one argument")
-        ShingleHashes(args.head)
-      })
+  def register(spark: SparkSession): Unit = entry.register(spark)
 }

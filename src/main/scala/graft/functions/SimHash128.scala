@@ -1,11 +1,10 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, GenericInternalRow, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -90,13 +89,9 @@ case class SimHash128(child: Expression) extends UnaryExpression {
 }
 
 object SimHash128 {
+  /** The function's one registry entry, shared with GraftExtensions. */
+  val entry: FunctionEntry = FunctionEntry.unary("simhash128", classOf[SimHash128])(SimHash128(_))
+
   /** Idempotently register `simhash128(text)`. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("simhash128"),
-      new ExpressionInfo(classOf[SimHash128].getName, "simhash128"),
-      (args: Seq[Expression]) => {
-        require(args.length == 1, "simhash128 takes one argument")
-        SimHash128(args.head)
-      })
+  def register(spark: SparkSession): Unit = entry.register(spark)
 }

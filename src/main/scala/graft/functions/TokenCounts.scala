@@ -1,11 +1,10 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, GenericInternalRow, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -67,13 +66,9 @@ case class TokenCounts(child: Expression) extends UnaryExpression {
 }
 
 object TokenCounts {
+  /** The function's one registry entry, shared with GraftExtensions. */
+  val entry: FunctionEntry = FunctionEntry.unary("token_counts", classOf[TokenCounts])(TokenCounts(_))
+
   /** Idempotently register `token_counts(text)`. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("token_counts"),
-      new ExpressionInfo(classOf[TokenCounts].getName, "token_counts"),
-      (args: Seq[Expression]) => {
-        require(args.length == 1, "token_counts takes one argument")
-        TokenCounts(args.head)
-      })
+  def register(spark: SparkSession): Unit = entry.register(spark)
 }

@@ -3,10 +3,9 @@ package graft.functions
 import java.security.MessageDigest
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.types.{DataType, IntegerType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -83,14 +82,13 @@ object TokenHash16 {
   def apply(child: Expression): TokenHash16 =
     TokenHash16(child, org.apache.spark.sql.catalyst.expressions.Literal(0))
 
+  /** The function's one registry entry, shared with GraftExtensions. */
+  val entry: FunctionEntry = FunctionEntry("token_hash16", classOf[TokenHash16]) {
+    case Seq(s) => TokenHash16(s)
+    case Seq(s, b) => TokenHash16(s, b)
+    case _ => throw new IllegalArgumentException("token_hash16 takes 1 or 2 arguments")
+  }
+
   /** Idempotently register `token_hash16(str[, band])` in the session's registry. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("token_hash16"),
-      new ExpressionInfo(classOf[TokenHash16].getName, "token_hash16"),
-      (args: Seq[Expression]) => args match {
-        case Seq(s) => TokenHash16(s)
-        case Seq(s, b) => TokenHash16(s, b)
-        case _ => throw new IllegalArgumentException("token_hash16 takes 1 or 2 arguments")
-      })
+  def register(spark: SparkSession): Unit = entry.register(spark)
 }

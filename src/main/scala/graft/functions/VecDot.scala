@@ -1,10 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
@@ -79,13 +78,9 @@ case class VecDot(left: Expression, right: Expression) extends BinaryExpression 
 }
 
 object VecDot {
+  /** The function's one registry entry, shared with GraftExtensions. */
+  val entry: FunctionEntry = FunctionEntry.binary("vec_dot", classOf[VecDot])(VecDot(_, _))
+
   /** Idempotently register `vec_dot(array<float>, array<float>)`. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("vec_dot"),
-      new ExpressionInfo(classOf[VecDot].getName, "vec_dot"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2, "vec_dot takes two arguments")
-        VecDot(args.head, args(1))
-      })
+  def register(spark: SparkSession): Unit = entry.register(spark)
 }

@@ -124,12 +124,8 @@ object Components {
     // the pair mass from ALL rounds dwarfs the one-time degree scan — once the
     // graph is big enough that rounds dominate the prepass's fixed job floor
     // ([[RetireMinSymRows]]); below that the prepass is skipped outright.
-    // Branch priority: explicit caller force (specs pin both branches) >
-    // SPARK_GRAFT_RETIRE_PAIRS=0/1 (operator A/B knob, same human-outranks-
-    // heuristic contract as SPARK_GRAFT_SHUFFLE_PARTITIONS) > the size gate.
-    val doRetire = retirePairs
-      .orElse(Knobs.bool("SPARK_GRAFT_RETIRE_PAIRS"))
-      .getOrElse(sym.count() >= RetireMinSymRows)
+    // An explicit caller force (specs pin both branches) outranks the size gate.
+    val doRetire = retirePairs.getOrElse(sym.count() >= RetireMinSymRows)
     val (pairLabels, residual) = if (!doRetire) {
       logLine(f"stage=retire_pairs skipped=true sec=${(System.nanoTime() - tRet) / 1e9}%.2f")
       // empty, typed off sym so the final union matches the loop's id type

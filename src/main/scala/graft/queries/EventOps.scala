@@ -54,56 +54,37 @@ object EventOps {
         col("__view.vts").as("view_ts"), col("__view.vv").as("view_value"))
   }
 
-  /** e06 — hot-key-safe sessionization, two forms of the same two-stage
-    * plan differing ONLY in how stage 1 computes the per-(user, day) session
-    * segments (r19 probe, the r18 VERDICT's most-expensive-event-row item):
+  /** e06 — hot-key-safe sessionization in two stages. Stage 1 computes the
+    * per-(user, day) session segments with the same gaps-and-islands rewrite
+    * stage 2 uses, keyed by (user_id, __day): the exchange carries bare
+    * (user_id, ts, __day) rows, one sort serves both window functions, and
+    * the groupBy(user_id, __day, __sid) needs NO second exchange
+    * (HashPartitioning(user_id, __day) satisfies the clustering on a
+    * superset key). Stage 2 repairs the sessions split at day boundaries.
+    * A new session opens exactly when ts - prev >= the gap, so the rows equal
+    * e01's (PlanAuditSpec pins it; the shared oracle is e01's).
     *
-    *  - `windowStage1 = false`: `session_window` aggregation. The exchange
-    *    partitions on (user_id, __day) but every event crosses it WIDENED by
-    *    the session struct column (two timestamps computed pre-shuffle), and
-    *    the merge runs through the interpreted UpdatingSessionsIterator.
-    *  - `windowStage1 = true`: the same gaps-and-islands rewrite stage 2
-    *    already uses, keyed by (user_id, __day): the exchange carries bare
-    *    (user_id, ts, __day) rows, one sort serves both window functions,
-    *    and the final groupBy(user_id, __day, __sid) needs NO second
-    *    exchange (HashPartitioning(user_id, __day) satisfies the clustering
-    *    on a superset key).
-    *
-    * Both forms split sessions at day boundaries and repair them in stage 2,
-    * and both open a new session exactly when ts - prev >= the gap, so they
-    * are row-identical by construction (PlanAuditSpec pins it; the shared
-    * oracle is e01's). `windowStage1 = None` resolves
-    * SPARK_GRAFT_E06_WINDOW_STAGE1=0/1, then the measured default: the
-    * window form (r19 sf100 A/B, 16g/16, 2 reps each: 91.8 s warm / 3.7 GB
-    * shuffle / 3.6 GB live scratch peak vs the session_window form's
-    * 109.8 s / 5.6 GB / 5.5 GB — the narrow exchange and the struct-free
-    * sort win wall, bytes, AND live peak; the trade is cumulative spill
-    * CHURN, 37.1 vs 11.0 GB, which retires per merge and never accumulates
-    * — the b10 pattern, SCALECHECK r16).
+    * Measured against the `session_window` form of stage 1, which widened
+    * every event crossing the exchange by the session struct and merged
+    * through the interpreted UpdatingSessionsIterator: r19 sf100 (16g/16,
+    * 2 reps each) 91.8 s warm / 3.7 GB shuffle / 3.6 GB live scratch peak
+    * vs 109.8 s / 5.6 GB / 5.5 GB, and r21 at 1 B events 814.8 s / 37.0 GB
+    * vs 908.6 s / 55.1 GB. The trade is cumulative spill CHURN (37.1 vs
+    * 11.0 GB at sf100), which retires per merge and never accumulates — the
+    * b10 pattern, SCALECHECK r16.
     */
-  private[graft] def sessionsSalted(s: SparkSession, d: String,
-      windowStage1: Option[Boolean] = None): DataFrame = {
+  private[graft] def sessionsSalted(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val gapMicros = 30L * 60 * 1000000
-    val useWindow = windowStage1
-      .orElse(Knobs.bool("SPARK_GRAFT_E06_WINDOW_STAGE1"))
-      .getOrElse(true)
-    val seg =
-      if (useWindow) {
-        val w1 = Window.partitionBy("user_id", "__day").orderBy("ts")
-        events(s, d)
-          .select(col("user_id"), col("ts"), to_date(col("ts")).as("__day"))
-          .withColumn("__ns", when(unix_micros(col("ts")) -
-            unix_micros(lag("ts", 1).over(w1)) >= gapMicros, 1).otherwise(0))
-          .withColumn("__sid", sum("__ns").over(
-            w1.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-          .groupBy("user_id", "__day", "__sid")
-          .agg(count(lit(1)).as("n"), min("ts").as("s_start"), max("ts").as("s_end"))
-      } else
-        events(s, d)
-          .groupBy(col("user_id"), to_date(col("ts")).as("__day"),
-            session_window(col("ts"), "30 minutes"))
-          .agg(count(lit(1)).as("n"), min("ts").as("s_start"), max("ts").as("s_end"))
+    val w1 = Window.partitionBy("user_id", "__day").orderBy("ts")
+    val seg = events(s, d)
+      .select(col("user_id"), col("ts"), to_date(col("ts")).as("__day"))
+      .withColumn("__ns", when(unix_micros(col("ts")) -
+        unix_micros(lag("ts", 1).over(w1)) >= gapMicros, 1).otherwise(0))
+      .withColumn("__sid", sum("__ns").over(
+        w1.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+      .groupBy("user_id", "__day", "__sid")
+      .agg(count(lit(1)).as("n"), min("ts").as("s_start"), max("ts").as("s_end"))
     val w = Window.partitionBy("user_id").orderBy("s_start")
     seg
       .withColumn("__ns2", when(unix_micros(col("s_start")) -
@@ -164,8 +145,8 @@ object EventOps {
 
     // Hot-key-safe sessionization — the pre-split e01/e04's scaladocs promise for
     // users whose event history exceeds executor memory. Stage 1 co-groups on
-    // (user_id, DAY): session_window's merging state then never holds more than one
-    // user-day of events, and a session spanning midnight is split exactly at an
+    // (user_id, DAY): its window then never holds more than one user-day of
+    // events, and a session spanning midnight is split exactly at an
     // event boundary. Stage 2 merges those splits with gaps-and-islands over the
     // per-SESSION rows — orders of magnitude fewer than events (the user-partitioned
     // window that would be a hot-key hazard over raw events is harmless over session

@@ -1,17 +1,16 @@
 package graft.queries
 
-/** Strict parsing for the operator A/B env knobs
-  * (`SPARK_GRAFT_RETIRE_PAIRS`, `SPARK_GRAFT_D11_CACHE`,
-  * `SPARK_GRAFT_VERIFY_ARRAYS`).
+/** Strict parsing for the env knobs that switch or size engine behaviour
+  * (`SPARK_GRAFT_PREFLIGHT`, `SPARK_GRAFT_REP_DRAIN`, `SPARK_GRAFT_BUCKET_CAP`,
+  * `SPARK_GRAFT_BUCKET_STATE_CAP`, `SPARK_GRAFT_RESIDUE_MOD`).
   *
-  * Only the literal strings "0" and "1" are meaningful; anything else
-  * (an accidental "true", "yes", or empty export) warns once per knob name
-  * per JVM and falls through to the caller's built-in gate. Before round 14 the three
-  * knobs disagreed on this: two parsed `map(_ == "1")` (so "true" silently
-  * force-DISABLED the feature at scales where it wins 2x) and one parsed
-  * `contains("0")` (so garbage silently forced it ON) — an inconsistency
-  * that invites misrun A/B legs, where one mistyped export measures the
-  * wrong branch without any tell in the log.
+  * For [[bool]] only the literal strings "0" and "1" are meaningful; anything
+  * else (an accidental "true", "yes", or empty export) warns once per knob
+  * name per JVM and falls through to the caller's built-in default. Before
+  * round 14 the knobs disagreed on this: some parsed `map(_ == "1")` (so
+  * "true" silently force-DISABLED a feature) and one parsed `contains("0")`
+  * (so garbage silently forced it ON) — a mistyped export changed behaviour
+  * without any tell in the log.
   */
 object Knobs {
   // one warning per knob name per JVM: env vars cannot change mid-process,
@@ -35,7 +34,7 @@ object Knobs {
   /** Some(n) for a positive decimal integer; None (with a once-per-name
     * stderr warning) for any other set value; None silently when unset.
     * Same strict-parse contract as [[bool]] — a mistyped export must warn,
-    * never silently run the wrong A/B leg.
+    * never silently change behaviour or throw mid-run.
     */
   def int(name: String): Option[Int] =
     sys.env.get(name).flatMap { v =>

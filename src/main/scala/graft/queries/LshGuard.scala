@@ -109,9 +109,7 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * sf100 (16g/16 standalone, r17 baselines in parentheses): d04 899 → 1038
   * MB for 10.97 → 5.9 s, d07-64 418 → ~500 MB for 19.8 → ~7 s — the byte
   * cost is the thin count exchange, the wall win is the interpreted
-  * aggregation running over ~nothing. `SPARK_GRAFT_SINGLETON_PREDROP=0`
-  * opts out (A/B measurement knob, same contract as
-  * SPARK_GRAFT_RETIRE_PAIRS).
+  * aggregation running over ~nothing. The pre-drop is unconditional.
   *
   * Observability (r18): a fired star used to be visible only if the operator
   * separately ran [[oversizedBuckets]] — a second aggregation ScaleCheck
@@ -278,7 +276,6 @@ object LshGuard {
     // every case (and the post-agg n > 1 filter drops the kept singleton,
     // doubling as the null-member backstop — a bucket of one non-null member
     // padded by nulls passes the row count but not the non-null count).
-    val predrop = Knobs.bool("SPARK_GRAFT_SINGLETON_PREDROP").getOrElse(true)
     val n = col("__g.n")
     val mn = col("__g.mn")
     val sorted = array_sort(col("__g.items"))
@@ -310,16 +307,15 @@ object LshGuard {
     // gracefully past ~4M hot buckets. An all-singleton corpus aggregates a
     // NULL bloom and might_contain(null) drops every row — vacuously right,
     // since no bucket could pair.
-    val members = if (!predrop) b else {
-      registerBloomKernels(b.sparkSession)
-      val b2 = b.withColumn("__kh", xxhash64(keys: _*))
-      val hotBloom = b2.groupBy("__kh").agg(count(lit(1)).as("__n0"))
-        .filter(col("__n0") > 1)
-        .agg(expr("graft_bloom_agg(__kh)").as("__bf"))
-        .scalar()
-      b2.filter(call_function("graft_might_contain", hotBloom, col("__kh")))
-        .drop("__kh")
-    }
+    registerBloomKernels(b.sparkSession)
+    val b2 = b.withColumn("__kh", xxhash64(keys: _*))
+    val hotBloom = b2.groupBy("__kh").agg(count(lit(1)).as("__n0"))
+      .filter(col("__n0") > 1)
+      .agg(expr("graft_bloom_agg(__kh)").as("__bf"))
+      .scalar()
+    val members = b2
+      .filter(call_function("graft_might_contain", hotBloom, col("__kh")))
+      .drop("__kh")
     members.groupBy(keys: _*)
       .agg(expr(s"bounded_collect_min(`$memberCol`, $stateCap)").as("__g"))
       // keys served their purpose (the grouping); prune them before the

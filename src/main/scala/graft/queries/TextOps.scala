@@ -60,20 +60,6 @@ object TextOps {
     bandsCache.getOrElseUpdate((s, d), bands(s, d).cache())
   }
 
-  /** The Jaccard verify compares shingles only by EQUALITY, never by content,
-    * so the verify path carries xxhash64(shingle) instead of the ~18-char
-    * string: the distinct and both intersection-join exchanges shrink ~2.5×
-    * (fixed 16-byte rows), which is what let the fifth-decade verify fit this
-    * box's scratch disk (round 10 — the string form ran out of shuffle space
-    * at 50M docs). The tolerated error is a WITHIN-DOC 64-bit collision
-    * merging two of a doc's ~50 shingles (~2^-54 per corpus at sf1000, zero in
-    * practice); bands/minhash still consume the true strings, and the DuckDB
-    * oracles compare the i/ca/cb COUNTS, which hashing leaves bit-identical
-    * absent a collision.
-    */
-  private def hashedShingles(df: DataFrame): DataFrame =
-    df.select(col("doc_id"), xxhash64(col("shingle")).as("shingle"))
-
   /** Size the session's shuffle for a shingle-width exchange BEFORE building
     * any frame that explodes per-token rows ([[Sizing.autoSizeShingleExchange]]:
     * documents footprint × the measured intermediate-to-input ratio). Called
@@ -94,6 +80,14 @@ object TextOps {
     * cached rows at the same information content, and the verify that reads
     * it has NO aggregation at all (the intersection cardinality computes
     * scan-locally per pair via [[graft.functions.IntersectCount]]).
+    *
+    * The verify compares shingles only by EQUALITY, never by content, so it
+    * carries xxhash64(shingle) instead of the ~18-char string (what let the
+    * fifth-decade verify fit this box's scratch disk, round 10). The
+    * tolerated error is a WITHIN-DOC 64-bit collision merging two of a doc's
+    * ~50 shingles (~2^-54 per corpus at sf1000); bands/minhash still consume
+    * the true strings, and the DuckDB oracles compare the i/ca/cb COUNTS,
+    * which hashing leaves bit-identical absent a collision.
     */
   private def shingleArraysCached(s: SparkSession, d: String): DataFrame = {
     // sizing is for the CONSUMERS (the verify's pair-join exchanges carry
@@ -216,24 +210,6 @@ object TextOps {
       .orderBy("doc_id")
   }
 
-  /** Broadcast the eval slice while `documents.parquet` stays under 256 MB
-    * on disk: the measured eval hashed-relation size tracks the compressed
-    * documents bytes ~1:1 (57 MB docs -> ~50 MB relation, fine; 560 MB docs ->
-    * ~512 MB relation, OOM), so the gate sits 4.5x above the proven-good point
-    * and 2.2x below the proven-bad one. Above it the planner's shuffle join
-    * takes over — the right plan once the "benchmark suite" is corpus-sized.
-    */
-  private val BroadcastEvalMaxDocBytes: Long = 256L << 20
-
-  /** word 3-gram shingles: (doc_id, shingle), one row per position. */
-  private def shinglesOf(docs: DataFrame): DataFrame =
-    docs
-      .select(col("doc_id"), split(col("text"), " ").as("tk"))
-      .select(col("doc_id"), col("tk"),
-        explode(when(size(col("tk")) >= 3, sequence(lit(1), size(col("tk")) - 2))
-          .otherwise(array().cast("array<int>"))).as("i"))
-      .select(col("doc_id"), concat_ws(" ", slice(col("tk"), col("i"), lit(3))).as("shingle"))
-
   /** MinHash signature banded for LSH: (doc_id, band, sig); k=8 hashes, 4 bands of 2.
     * h_j(doc) = min over shingles of md5(j || '|' || shingle); band sig = md5 of the
     * band's hashes joined in j order.
@@ -323,23 +299,32 @@ object TextOps {
       }
     }),
     "text-decontam" -> (() => {
-      // SAME branch chain as the d11 entry (knob > footprint gate), so the
-      // prewarm builds the cache exactly when a query will read it: with
-      // SPARK_GRAFT_D11_CACHE=1 forced above the footprint gate, warmup must
-      // still build (or the first timed d11 rep absorbs the build — the
-      // attribution skew prewarm exists to prevent); with it forced to 0
-      // below the gate, warmup must NOT build a cache no query reads (the
-      // eviction/disk pressure would contaminate the A/B's no-cache leg).
-      // Without the knob: above the gate no query reads this cache, and
+      // the d11 entry's own gate: above it no query reads this cache, and
       // building it would evict the caches that do serve (and spill its
-      // corpus-sized blocks to the scratch disk the shuffles need).
-      val fp = Sizing.footprintBytesCached(s, s"$d/documents.parquet")
-      val useCache = Knobs.bool("SPARK_GRAFT_D11_CACHE")
-        .getOrElse(fp >= 0 && fp < CachedVerifyMaxDocBytes)
-      if (useCache) {
+      // corpus-sized blocks to the scratch disk the shuffles need)
+      if (d11CacheOn(s, d)) {
         decontamShinglesCached(s, d).count(); ()
       }
     }))
+
+  /** d11's strategy gate, shared by the query entry and its prewarm stage so
+    * the prewarm builds the cache exactly when the query will read it. Below
+    * [[CachedVerifyMaxDocBytes]]: the shared cached distinct-shingle frame +
+    * broadcast eval side (warm across bench reps, proven at sf0.01-sf10).
+    * The broadcast holds under the same pivot: the measured eval
+    * hashed-relation size tracks the compressed documents bytes ~1:1 (57 MB
+    * docs -> ~50 MB relation, fine; 560 MB docs -> ~512 MB relation, OOM).
+    * Above it — or on an unknown footprint (-1), failing SAFE to the plan
+    * that is correct at any size — the pushed-down two-sided plan with no
+    * cache and no broadcast ([[decontaminateDocs]]: the ungated cache's disk
+    * blocks plus the post-explode filters were the measured sf1000
+    * scratch-disk killer, round 13). DecontamSpec pins row-parity between
+    * the branches, so the gate trades speed, never rows.
+    */
+  private[graft] def d11CacheOn(s: SparkSession, d: String): Boolean = {
+    val fp = Sizing.footprintBytesCached(s, s"$d/documents.parquet")
+    fp >= 0 && fp < CachedVerifyMaxDocBytes
+  }
 
   /** Unpersist and drop every cached frame (staleness/leak hook for long sessions). */
   def clearCaches(): Unit = {
@@ -456,12 +441,8 @@ object TextOps {
     * display), d09 (thresholds the unrounded ratio for clustering edges), and
     * d10 (same, over the quality-gated deduped survivors).
     * The intersection join runs over candidate pairs only, never all pairs.
-    */
-  private def jaccardCountsFrom(cand: DataFrame, dsh: DataFrame): DataFrame =
-    jaccardCountsFromParts(cand, dsh,
-      dsh.groupBy("doc_id").agg(count(lit(1)).as("c")))
-
-  /** The r20 verify: [[jaccardCountsFrom]] reformulated over DOC-level
+    *
+    * Since r20 it works over DOC-level
     * distinct-shingle ARRAYS — two keyed joins and a scan-local
     * [[graft.functions.IntersectCount]] kernel, NO aggregation anywhere.
     * `arr` is (doc_id, __sh array<bigint>), one row per doc.
@@ -482,8 +463,8 @@ object TextOps {
     * distinct xxhash64 values the old join matched on, ca/cb are the array
     * sizes the old groupBy(doc_id).count computed, and pairs with an empty
     * intersection are dropped by the `i >= 1` filter exactly as the old
-    * inner intersection join dropped them (JaccardGateSpec pins all forms
-    * row-for-row).
+    * inner intersection join dropped them (JaccardGateSpec pins both array
+    * forms row-for-row against the exploded form).
     */
   private def jaccardCountsFromArrays(cand: DataFrame, arr: DataFrame): DataFrame = {
     graft.functions.IntersectCount.register(arr.sparkSession)
@@ -497,22 +478,6 @@ object TextOps {
       .filter(col("i") >= 1)
   }
 
-  /** [[jaccardCountsFrom]] with the per-doc count frame supplied by the
-    * caller: the array-form restricted branch computes `c` scan-locally
-    * (`size` of the distinct-shingle array) instead of re-aggregating the
-    * exploded rows — see [[jaccardCountsRestricted]] rule 2.
-    */
-  private def jaccardCountsFromParts(cand: DataFrame, dsh: DataFrame,
-      cnt: DataFrame): DataFrame = {
-    val inter = cand
-      .join(dsh.select(col("doc_id").as("id_a"), col("shingle")), "id_a")
-      .join(dsh.select(col("doc_id").as("id_b"), col("shingle")), Seq("id_b", "shingle"))
-      .groupBy("id_a", "id_b").agg(count(lit(1)).as("i"))
-    inter
-      .join(cnt.select(col("doc_id").as("id_a"), col("c").as("ca")), "id_a")
-      .join(cnt.select(col("doc_id").as("id_b"), col("c").as("cb")), "id_b")
-  }
-
   /** Verify-shingle strategy gate for [[jaccardCountsGated]]: below the
     * threshold the verify reads the shared cached distinct-shingle frame
     * (straight cache hits — warm-bench-optimal; a candidate-restricted
@@ -521,9 +486,9 @@ object TextOps {
     * "hit" becomes eviction churn + disk-spill reads (measured r10 at sf100:
     * d10 188.6 → 262/315 s, rep 2 SLOWER than rep 1 — the eviction tell), so
     * the verify instead shingles ONLY candidate docs scan-locally. Same
-    * 256 MB compressed-documents pivot as [[BroadcastEvalMaxDocBytes]], and
-    * for the same shape of reason: both caches grow ~linearly with the corpus
-    * while the memory they must fit is fixed; sf10 (56 MB) is measured-good,
+    * 256 MB compressed-documents pivot as d11's cache and eval broadcast
+    * ([[d11CacheOn]]), for the same shape of reason: both grow ~linearly
+    * with the corpus while the memory they must fit is fixed; sf10 (56 MB) is measured-good,
     * sf100 (560 MB) measured-bad, and the gate sits between with margin.
     */
   private val CachedVerifyMaxDocBytes: Long = 256L << 20
@@ -576,81 +541,50 @@ object TextOps {
     *    `groupBy(doc_id).count` (a second such exchange) — both evaluate in
     *    the scan task. (An `array_distinct(transform(...))`
     *    formulation of the same array interprets its lambda per shingle —
-    *    measured 10× slower than legacy on the sf100 edge build, SCALECHECK.md
-    *    round 13 — so the kernel is load-bearing, not a nicety.) Since r20
+    *    measured 10× slower than the pre-round-13 distinct + groupBy form
+    *    on the sf100 edge build, SCALECHECK.md round 13 — so the kernel is
+    *    load-bearing, not a nicety.) Since r20
     *    the arrays are not even exploded: the verify consumes them whole
     *    ([[jaccardCountsFromArrays]]), so the only shuffles left are the two
     *    pair-join exchanges, and no aggregation exists anywhere in the
     *    verify. Same rows by construction: the kernel emits the same
     *    xxhash64 values the old distinct keyed on, and a zero-shingle doc
     *    contributes an empty array (i = 0, filtered) instead of no count
-    *    row. JaccardGateSpec pins all forms (exploded baseline / cached
-    *    arrays / restricted arrays / legacy) row-for-row.
-    *
-    * `SPARK_GRAFT_VERIFY_ARRAYS=0` forces the legacy distinct+groupBy form
-    * (operator A/B knob, same human-outranks-heuristic contract as
-    * SPARK_GRAFT_RETIRE_PAIRS).
+    *    row. JaccardGateSpec pins both array forms row-for-row against
+    *    the exploded form.
     */
   private[graft] def jaccardCountsRestricted(s: SparkSession, d: String,
-      cand0: DataFrame): DataFrame =
-    if (Knobs.bool("SPARK_GRAFT_VERIFY_ARRAYS").contains(false))
-      jaccardCountsRestrictedLegacy(s, d, cand0)
-    else {
-      // r20: rule 2 taken one step further — the per-doc arrays no longer
-      // explode at all. The candidate-doc slice keeps its kernel-built
-      // distinct-shingle ARRAY on the doc row, and the verify is the same
-      // two-join zero-aggregation plan as the cached branch
-      // ([[jaccardCountsFromArrays]]); the explode, the shingle-level
-      // intersection exchange, and the groupBy(id_a, id_b) spill source are
-      // all gone. Rule 1 (restrict the DOCUMENT frame before shingling)
-      // stands unchanged via [[restrictedDocs]].
-      graft.functions.ShingleHashes.register(s)
-      val cand = cand0.localCheckpoint()
-      // checkpoint the candidate-doc ARRAY frame too (r20): both pair-join
-      // sides read it, and without the pin each side re-runs the whole
-      // documents scan + candidate-id aggregation + semi-join + shingle
-      // kernel (the sf100 after-plan showed the subtree twice). The frame is
-      // small — candidate docs only, one ~50-long array per doc (~0.4 KB/doc;
-      // ~16% of docs at sf100) — the exact shape the r9 cand checkpoint
-      // precedent pins as worth materializing once.
-      val docs = restrictedDocs(s, d, cand)
-        .select(col("doc_id"), expr("shingle_hashes(text)").as("__sh"))
-        .localCheckpoint()
-      jaccardCountsFromArrays(cand, docs)
-    }
-
-  /** Pre-round-13 restricted form: global distinct + groupBy count over the
-    * exploded rows. Kept reachable (knob above) as the A/B baseline and for
-    * the three-way gate spec; the array form replaces its two
-    * candidate-corpus × shingle-scale exchanges with scan-local expressions.
-    */
-  private[graft] def jaccardCountsRestrictedLegacy(s: SparkSession, d: String,
       cand0: DataFrame): DataFrame = {
+    // r20: rule 2 taken one step further — the per-doc arrays no longer
+    // explode at all. The candidate-doc slice keeps its kernel-built
+    // distinct-shingle ARRAY on the doc row, and the verify is the same
+    // two-join zero-aggregation plan as the cached branch
+    // ([[jaccardCountsFromArrays]]); the explode, the shingle-level
+    // intersection exchange, and the groupBy(id_a, id_b) spill source are
+    // all gone. Rule 1 (restrict the DOCUMENT frame before shingling)
+    // stands unchanged via [[restrictedDocs]].
+    graft.functions.ShingleHashes.register(s)
     val cand = cand0.localCheckpoint()
-    val vsh = hashedShingles(shinglesOf(restrictedDocs(s, d, cand))).distinct()
-    jaccardCountsFrom(cand, vsh)
+    // checkpoint the candidate-doc ARRAY frame too (r20): both pair-join
+    // sides read it, and without the pin each side re-runs the whole
+    // documents scan + candidate-id aggregation + semi-join + shingle
+    // kernel (the sf100 after-plan showed the subtree twice). The frame is
+    // small — candidate docs only, one ~50-long array per doc (~0.4 KB/doc;
+    // ~16% of docs at sf100) — the exact shape the r9 cand checkpoint
+    // precedent pins as worth materializing once.
+    val docs = restrictedDocs(s, d, cand)
+      .select(col("doc_id"), expr("shingle_hashes(text)").as("__sh"))
+      .localCheckpoint()
+    jaccardCountsFromArrays(cand, docs)
   }
 
   /** The candidate-doc slice of the documents table: semi-join on the ids of
-    * the (checkpointed) candidate pairs. Both restricted forms share it.
+    * the (checkpointed) candidate pairs.
     */
   private def restrictedDocs(s: SparkSession, d: String, cand: DataFrame): DataFrame = {
     val ids = cand.select(col("id_a").as("doc_id"))
       .union(cand.select(col("id_b").as("doc_id"))).distinct()
     documents(s, d).join(ids, Seq("doc_id"), "left_semi")
-  }
-
-  /** Test hook: the pre-r20 exploded-join verify over a freshly built
-    * distinct-shingle frame — the ground-truth baseline the equivalence spec
-    * compares both array forms (and legacy) against. Uncached on purpose: the
-    * spec wants the OLD plan shape (shingle-level intersection join +
-    * groupBy(id_a, id_b) count), not the old cache.
-    */
-  private[graft] def jaccardCountsExplodedForTest(s: SparkSession, d: String,
-      cand: DataFrame): DataFrame = {
-    graft.functions.ShingleHashes.register(s)
-    jaccardCountsFrom(cand, documents(s, d).select(col("doc_id"),
-      explode(expr("shingle_hashes(text)")).as("shingle")))
   }
 
   /** Test hook: the gate's below-threshold branch (arrays over the shared
@@ -863,17 +797,14 @@ object TextOps {
     * collectable the moment the edge table lands, BEFORE the loop's
     * checkpoints and aggregations stack on top).
     *
-    * `staged`: Some overrides (the spec's parity pin and the measurement
-    * knob's parsed value); None gates on the documents footprint — staged at
-    * and above [[CachedVerifyMaxDocBytes]] (the same pivot where the verify
+    * `staged`: Some overrides (the spec's parity pin); None gates on the
+    * documents footprint — staged at and above [[CachedVerifyMaxDocBytes]] (the same pivot where the verify
     * switches to its scan-local big-corpus branch) or on an unknown
     * footprint (-1, failing SAFE to the shape that is correct at any size),
     * fused below it (the boundary write is pure constant overhead at oracle
     * scales, and the gate corpora stay byte-identical plans). Both branches
     * are row-identical by construction — same edge builder, same loop —
     * and ComponentsSpec-style pinned in StagedCleanSpec.
-    * SPARK_GRAFT_D09_STAGED=0/1 overrides the gate (A/B knob, same contract
-    * as SPARK_GRAFT_RETIRE_PAIRS).
     */
   private[graft] def dedupClusters(s: SparkSession, d: String,
       staged: Option[Boolean] = None): DataFrame = {
@@ -887,12 +818,10 @@ object TextOps {
     val edges0 = jaccardCounts(s, d)
       .filter(col("i").cast("double") / (col("ca") + col("cb") - col("i")) >= 0.5)
       .select("id_a", "id_b")
-    val useStage = staged
-      .orElse(Knobs.bool("SPARK_GRAFT_D09_STAGED"))
-      .getOrElse {
-        val fp = Sizing.footprintBytesCached(s, s"$d/documents.parquet")
-        fp < 0 || fp >= CachedVerifyMaxDocBytes
-      }
+    val useStage = staged.getOrElse {
+      val fp = Sizing.footprintBytesCached(s, s"$d/documents.parquet")
+      fp < 0 || fp >= CachedVerifyMaxDocBytes
+    }
     val edges =
       if (!useStage) edges0
       else {
@@ -1029,26 +958,14 @@ object TextOps {
   }
 
   /** The signature width the registered d07 actually resolves for (s, d):
-    * SPARK_GRAFT_SIMHASH_BITS=64/128 overrides (the A/B measurement knob,
-    * warn-and-fall-through on anything else — same human-outranks-heuristic
-    * contract as SPARK_GRAFT_RETIRE_PAIRS), otherwise [[simhashBitsFor]] over
-    * the corpus row count. ONE resolver, shared by the d07 query entry and
-    * [[oraclesFor]]'s SQL selection, so the plan and the oracle SQL dumped
+    * [[simhashBitsFor]] over the corpus row count. ONE resolver, shared by
+    * the d07 query entry and [[oraclesFor]]'s SQL selection, so the plan and the oracle SQL dumped
     * for the same run can never disagree on width (r18 ADVICE: the static
     * 64-bit oracle replayed on a >32k-doc corpus — sf1's 50k docs — would
     * hash-mismatch the derived 128-bit plan and masquerade as a logic bug).
     */
   private[graft] def resolvedSimhashBits(s: SparkSession, d: String): Int =
-    Knobs.int("SPARK_GRAFT_SIMHASH_BITS")
-      .flatMap {
-        case b @ (64 | 128) => Some(b)
-        case other =>
-          System.err.println(s"[graft] ignoring SPARK_GRAFT_SIMHASH_BITS=" +
-            s"$other (expected 64 or 128); falling through to the " +
-            "corpus-derived width")
-          None
-      }
-      .getOrElse(simhashBitsFor(docCountCached(s, d)))
+    simhashBitsFor(docCountCached(s, d))
 
   /** t08's keep predicate (token count, stopword ratio, mean word length bounds) —
     * shared by the t08 report query and d10's pipeline gate. Unrounded doubles,
@@ -1176,9 +1093,6 @@ object TextOps {
     // routes through the 128-bit kernel and its 4×32-bit banding (= the d12
     // plan) — the oracle/gate scales all resolve to 64, keeping this row's
     // oracle and specs on the pinned 64-bit semantics.
-    // SPARK_GRAFT_SIMHASH_BITS=64/128 overrides the derivation (A/B
-    // measurement knob, same human-outranks-heuristic contract as
-    // SPARK_GRAFT_RETIRE_PAIRS; any other value warns and falls through).
     "d07_simhash_neardup" -> ((s, d) =>
       if (resolvedSimhashBits(s, d) >= 128) simhash128NearDup(s, d)
       else simhashNearDupPairs(simhashCached(s, d)).orderBy("id_a", "id_b")),
@@ -1247,24 +1161,8 @@ object TextOps {
     // gated on the documents table's on-disk footprint (metadata only, memoized)
     // rather than hard-coded — see [[decontaminateFrom]] for the measured failure.
     "d11_decontam" -> ((s, d) => {
-      // Footprint-gated like the d05 verify (jaccardCountsGated): below the
-      // gate, the shared cached distinct-shingle frame + broadcast eval side
-      // (warm across bench reps, proven at sf0.01-sf10); above it — or on an
-      // unknown footprint (-1), failing SAFE to the plan that is correct at
-      // any size — the pushed-down two-sided plan with no cache and no
-      // broadcast ([[decontaminateDocs]]: the ungated cache's disk blocks
-      // plus the post-explode filters were the measured sf1000 scratch-disk
-      // killer, round 13).
-      // Branch priority: SPARK_GRAFT_D11_CACHE=0/1 (operator A/B knob, same
-      // human-outranks-heuristic contract as SPARK_GRAFT_RETIRE_PAIRS) > the
-      // footprint gate. DecontamSpec pins row-parity between the branches, so
-      // the knob can only trade speed, never rows.
-      val fp = Sizing.footprintBytesCached(s, s"$d/documents.parquet")
-      val useCache = Knobs.bool("SPARK_GRAFT_D11_CACHE")
-        .getOrElse(fp >= 0 && fp < CachedVerifyMaxDocBytes)
-      if (useCache)
-        decontaminateFrom(decontamShinglesCached(s, d),
-          broadcastEval = fp >= 0 && fp < BroadcastEvalMaxDocBytes)
+      // footprint-gated like the d05 verify (jaccardCountsGated): [[d11CacheOn]]
+      if (d11CacheOn(s, d)) decontaminateFrom(decontamShinglesCached(s, d))
       else {
         sizeShingleExchange(s, d)
         decontaminateDocs(documents(s, d), broadcastEval = false)
@@ -1406,7 +1304,8 @@ object TextOps {
         .orderBy("doc_id")),
   )
 
-  /** Shared DuckDB CTEs mirroring [[shinglesOf]]/[[bandsOf]]/[[candidatePairsFromBands]],
+  /** Shared DuckDB CTEs mirroring the word-3-gram shingles of
+    * [[graft.functions.ShingleHashes]], [[bandsOf]] and [[candidatePairsFromBands]],
     * parameterized on the source relation so d10 can run them over its
     * quality-gated deduped survivors instead of the full documents table.
     */

@@ -241,15 +241,14 @@ object VectorOps {
     */
   private[graft] val CachedBandsMaxEmbBytes: Long = 8L << 30
 
-  /** Branch priority: SPARK_GRAFT_VEC_BANDS_CACHE=0/1 (operator A/B knob,
-    * human outranks heuristic) > the footprint gate. Both branches feed the
-    * identical guarded pair plan — the knob trades speed, never rows.
+  /** The footprint gate: cache the banded frame below
+    * [[CachedBandsMaxEmbBytes]]. Both branches feed the identical guarded
+    * pair plan — the gate trades speed, never rows.
     */
-  private[graft] def vecBandsCacheOn(s: SparkSession, d: String): Boolean =
-    Knobs.bool("SPARK_GRAFT_VEC_BANDS_CACHE").getOrElse {
-      val fp = Sizing.footprintBytesCached(s, s"$d/embeddings.parquet")
-      fp >= 0 && fp < CachedBandsMaxEmbBytes
-    }
+  private[graft] def vecBandsCacheOn(s: SparkSession, d: String): Boolean = {
+    val fp = Sizing.footprintBytesCached(s, s"$d/embeddings.parquet")
+    fp >= 0 && fp < CachedBandsMaxEmbBytes
+  }
 
   /** The banded membership frame d08's guard reads twice — cached below the
     * gate, rebuilt per read above it.

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Bucket-size distribution probe behind [[graft.queries.LshGuard]]'s default
@@ -16,14 +15,7 @@ object BucketStats {
     graft.JvmCheck.warnIfModulesClosed()
     java.util.Locale.setDefault(java.util.Locale.ROOT)
     val dir = args(0)
-    val spark = SparkSession.builder()
-      .appName("graft-bucket-stats")
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
-      .config("spark.ui.enabled", false)
-      .config("spark.log.level", "WARN")
-      .getOrCreate()
+    val spark = graft.LocalSession(defaultCpus = 32)
     graft.queries.Sizing.adviseTaskMemory(spark)
     try {
       def report(label: String, sizes: org.apache.spark.sql.DataFrame): Unit = {

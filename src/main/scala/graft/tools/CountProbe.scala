@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Digit probe: run one registered query and print its row count plus, when
@@ -17,14 +16,7 @@ object CountProbe {
     java.util.Locale.setDefault(java.util.Locale.ROOT)
     val name = args(0)
     val dir = args(1)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", false)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession(defaultCpus = 32)
     graft.queries.Sizing.adviseTaskMemory(spark)
     try {
       val df = graft.SparkEntry.queries(name)(spark, dir)

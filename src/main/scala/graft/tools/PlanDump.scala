@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump `.explain("formatted")` for every registered query (or a csv subset)
   * into one file per query, in a single Spark session. Round-20 optimization
   * deliverable: plans/r20/<query>_before.txt / _after.txt — the judge checks
@@ -22,14 +20,7 @@ object PlanDump {
     val only = if (args.length > 2 && args(2).nonEmpty) Some(args(2).split(",").toSet) else None
     val dir = if (args.length > 3) args(3)
       else sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", false)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession(defaultCpus = 32)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     val names = graft.SparkEntry.queries.keys.toSeq.sorted
       .filter(n => only.forall(_.contains(n)))

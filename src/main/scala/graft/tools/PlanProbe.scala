@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Scratch harness: print the formatted plan and wall time of one
   * `SparkEntry.queries` entry on a given data dir. Not part of the driver
   * contract — a local plan-audit tool.
@@ -17,17 +15,11 @@ object PlanProbe {
     val name = args(0)
     val dir = args(1)
     val reps = if (args.length > 2) args(2).toInt else 1
-    val spark = SparkSession.builder()
-      .appName("graft-plan-probe")
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      // 32 suits sf0.1–sf10 on this box; at sf100 a 500M-row aggregation needs
-      // more partitions for its per-task hash maps to fit an 8g heap — the
-      // same knob a real cluster sizes to its data (AQE coalesces the excess)
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
-      .config("spark.ui.enabled", false)
-      .config("spark.log.level", "WARN")
-      .getOrCreate()
+    // at sf100 a 500M-row aggregation needs more shuffle partitions than
+    // cores for its per-task hash maps to fit an 8g heap: set
+    // SPARK_GRAFT_SHUFFLE_PARTITIONS, the same knob a real cluster sizes to
+    // its data (AQE coalesces the excess)
+    val spark = graft.LocalSession(defaultCpus = 32)
     graft.queries.Sizing.adviseTaskMemory(spark)
     // Scratch-disk preflight: four round-13 fifth-decade runs died on
     // `No space left on device` MID-RUN; refuse up front when the family's

@@ -2,14 +2,14 @@ package graft.queries
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Pins the strict 0/1 contract of the A/B env knobs' parser. The knobs
-  * themselves can't be exercised here (tests can't mutate the JVM's env), so
-  * this pins the one behavior that matters: only "0"/"1" are meaningful, and
-  * the production sites all route through [[Knobs.bool]] — before round 14,
-  * `SPARK_GRAFT_RETIRE_PAIRS=true` silently force-DISABLED the retirement
-  * prepass (parsed `map(_ == "1")`) while `SPARK_GRAFT_VERIFY_ARRAYS=true`
-  * silently forced the kernel ON (parsed `contains("0")`) — opposite
-  * conventions that could misrun an A/B leg with no tell in the log.
+/** Pins the strict contract of the env knobs' parser. The knobs themselves
+  * can't be exercised here (tests can't mutate the JVM's env), so this pins
+  * the one behavior that matters: only "0"/"1" (or a positive integer) are
+  * meaningful, and the production sites all route through [[Knobs]] — before
+  * round 14 one knob parsed `map(_ == "1")` (so "true" silently
+  * force-DISABLED its feature) while another parsed `contains("0")` (so
+  * garbage silently forced it ON) — opposite conventions with no tell in the
+  * log.
   */
 class KnobsSpec extends AnyFunSuite {
 
@@ -19,8 +19,8 @@ class KnobsSpec extends AnyFunSuite {
   }
 
   test("production knob sites all parse via Knobs.bool") {
-    // structural net: grep the three knob names' use sites in main sources —
-    // each must appear only inside a Knobs.bool(...) call (plus docs/strings)
+    // structural net: grep the knob names' use sites in main sources —
+    // each must appear only inside a Knobs call (plus docs/strings)
     val root = java.nio.file.Paths.get("src/main/scala")
     val scalaFiles = {
       val s = java.nio.file.Files.walk(root)
@@ -29,17 +29,22 @@ class KnobsSpec extends AnyFunSuite {
         s.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
       } finally s.close()
     }
-    val knobs = Seq("SPARK_GRAFT_RETIRE_PAIRS", "SPARK_GRAFT_D11_CACHE",
-      "SPARK_GRAFT_VERIFY_ARRAYS", "SPARK_GRAFT_PREFLIGHT",
-      "SPARK_GRAFT_BUCKET_CAP")
-    for (f <- scalaFiles) {
-      val src = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
+    val knobs = Seq("SPARK_GRAFT_PREFLIGHT", "SPARK_GRAFT_REP_DRAIN",
+      "SPARK_GRAFT_BUCKET_CAP", "SPARK_GRAFT_BUCKET_STATE_CAP",
+      "SPARK_GRAFT_RESIDUE_MOD")
+    val sources = scalaFiles.map(f => f -> new String(java.nio.file.Files.readAllBytes(f), "UTF-8"))
+    // the list tracks the code: exactly the names passed to Knobs.bool/Knobs.int
+    val parsed = sources.flatMap { case (_, src) =>
+      raw"""Knobs\.(?:bool|int)\("([A-Z0-9_]+)"\)""".r.findAllMatchIn(src).map(_.group(1))
+    }.toSet
+    assert(parsed === knobs.toSet)
+    for ((f, src) <- sources) {
       for (k <- knobs) {
-        // any sys.env read of a knob must be the Knobs.bool implementation
+        // any sys.env read of a knob must be the Knobs implementation
         // itself (Knobs.scala) — nowhere else
-        val rawRead = raw"""sys\.env\.get\("$k"\)""".r
+        val rawRead = raw"""sys\.env(\.\w+)?\("$k"""".r
         assert(rawRead.findFirstIn(src).isEmpty,
-          s"$f reads $k via sys.env directly; route it through Knobs.bool")
+          s"$f reads $k via sys.env directly; route it through Knobs")
       }
     }
   }
