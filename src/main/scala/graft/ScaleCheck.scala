@@ -875,14 +875,10 @@ object ScaleCheck {
         val v1 = graft.hpct.XmlFixtureSynth.variants(fix1, tmp, perFixture, families, "exp1")
         val v2 = graft.hpct.XmlFixtureSynth.variants(fix2, tmp, perFixture, families, "exp2")
         val paths = (v1 ++ v2).map(_._1)
-        // force frame execution inside the timed block: load() alone is
-        // driver parse + a LAZY frame, which under-measures the single side
-        // and inflates speedup_vs_serial vs the fully-executed many side
+        // load() materializes its frame (one eager checkpoint), so the single
+        // side is fully executed inside the timed block, like the many side
         val (singles, secSingles) = timed(
-          Seq(fix1, fix2).map { f =>
-            val pf = graft.hpct.ProfileLoad.load(spark, f)
-            pf.df.count(); pf
-          })
+          Seq(fix1, fix2).map(graft.hpct.ProfileLoad.load(spark, _)))
         val expSums = singles.map { pf =>
           val c = s"${pf.meta.percentageColumn} ratio of total"
           pf.df.agg(round(sum(col(s"`$c`")), 6)).head().getDouble(0)

@@ -27,7 +27,8 @@ object SparkEntry {
 
   /** Flagship query on sf=0.001; driver smoke-checks rows>0. Loads the reference
     * HPCToolkit fixture end-to-end (parse -> formulas -> ratios -> hot path ->
-    * compact) when present, else falls back to the hierarchy hot path.
+    * compact) when present, else falls back to the hierarchy hot path and says so
+    * on stderr.
     */
   def entry(spark: SparkSession): DataFrame = {
     val fixture = "/root/reference/test/data/experiment1.xml"
@@ -35,6 +36,7 @@ object SparkEntry {
       val pf = hpct.ProfileLoad.load(spark, fixture)
       hpct.Ops.compact(hpct.Ops.hotPath(pf)).df
     } else {
+      System.err.println(s"[entry] fixture $fixture not present; running a14_hot_path instead")
       queries("a14_hot_path")(spark, "/root/testdata/sf0.001")
     }
   }

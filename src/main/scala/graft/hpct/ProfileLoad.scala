@@ -14,13 +14,24 @@ import org.apache.spark.sql.types._
   * negative variance — the reference uses `cmath.sqrt`, ibid:3) are represented as
   * `struct<re: double, im: double>` columns; everything else is `double`. Ratio and
   * hot-path columns only ever touch real metrics (SURVEY §7.4.1).
+  *
+  * Division by zero diverges from the reference. A finalize formula with a 0 divisor
+  * yields null (the Formulas zero-divisor policy). A ratio column whose base is 0 at
+  * the root (ratio of total) or at a parent (ratio of parent) raises under Spark's
+  * default ANSI mode, where pandas gives inf/NaN; [[load]] raises it as an
+  * `ArithmeticException` naming the experiment file. With ANSI mode off the ratio is
+  * null.
   */
 object ProfileLoad {
 
   private val RootFixPattern = "(.+:.+) \\(E\\)".r
 
   /** Driver-side single-file load (parity path; fixture files are ~12k lines).
-    * For many files use [[loadMany]], which parses on executors.
+    * The returned frame is materialized once, like the reference constructor's eager
+    * percentage columns (HD.py:211): every operator on it reads the pinned rows
+    * instead of re-running parse, formulas, root fix and ratio joins. The operators
+    * themselves stay lazy. For many files use [[loadMany]], which parses on executors
+    * and returns a lazy frame.
     */
   def load(spark: SparkSession, path: String, maxDepth: Option[Int] = None,
       skipCallsites: Boolean = true): ProfileFrame = {
@@ -110,7 +121,8 @@ object ProfileLoad {
     * `ConvertToLocalRelation` evaluate the whole formula/ratio plan with interpreted
     * projections on the driver (observed OOM on the exp1 fixture); the RDD path keeps
     * execution in whole-stage codegen on executors — the same plan shape a many-file
-    * distributed load has.
+    * distributed load has. The frame is lazy; [[load]] runs its plan once, at the
+    * checkpoint in [[finishLoad]].
     */
   def rawFrame(spark: SparkSession, meta: ProfileMeta,
       rows: IndexedSeq[XmlReader.NodeRow]): DataFrame = {
@@ -325,9 +337,27 @@ object ProfileLoad {
     df.join(chosen, df("id") === chosen("__cid"), "left").drop("__cid")
   }
 
-  /** formula projection + root fix + ratio columns, shared by load paths. */
+  /** Formula projection + root fix + ratio columns, materialized by one eager
+    * `localCheckpoint`: the returned frame's plan is a single `LogicalRDD` over the
+    * pinned rows, so later operators no longer re-run the lineage. The blocks are
+    * released once the frame is unreachable. A division by zero in the ratio columns
+    * surfaces here, rethrown with the experiment file named.
+    */
   private def finishLoad(raw: DataFrame, meta: ProfileMeta): ProfileFrame = {
     val evaluated = rootFix(applyFormulas(raw, meta))
-    ProfileFrame(addRatioColumns(evaluated, meta.percentageColumn), meta)
+    val ratios = addRatioColumns(evaluated, meta.percentageColumn)
+    val pinned =
+      try ratios.localCheckpoint()
+      catch {
+        case e: Exception =>
+          val arith = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+            .find(_.isInstanceOf[ArithmeticException]).getOrElse(throw e)
+          val err = new ArithmeticException(
+            s"${meta.dbPath}: a root or parent value of ratio base " +
+              s"'${meta.percentageColumn}' is 0: ${arith.getMessage}")
+          err.initCause(e)
+          throw err
+      }
+    ProfileFrame(pinned, meta)
   }
 }
